@@ -64,25 +64,36 @@ def _bfs_clusters(emb: np.ndarray, ids: np.ndarray, k: int, theta: float):
     return cluster_of
 
 
-def test_connected_components_hand_graph(spark):
+def _components_both_paths(nodes, edges, monkeypatch):
+    """connected_components labels from the driver union-find (the edge
+    list is under _DRIVER_MAX_EDGES) and from the distributed
+    label-propagation loop (the cap lowered below the edge count)."""
+    from vector_search_test_spark.operators import cluster
+
+    def labels():
+        return {
+            r.id: r.component
+            for r in connected_components(nodes, edges).collect()
+        }
+
+    driver = labels()
+    monkeypatch.setattr(cluster, "_DRIVER_MAX_EDGES", 0)
+    return driver, labels()
+
+
+def test_connected_components_hand_graph(spark, monkeypatch):
     nodes = spark.createDataFrame([(i,) for i in range(7)], "id long")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (3, 4), (5, 5)], "src long, dst long"
     )
     want = {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6}
-    # both strategies must produce identical labels (auto picks driver
-    # union-find here; 'distributed' forces the label-propagation loop)
-    for strategy in ("driver", "distributed"):
-        got = {
-            r.id: r.component
-            for r in connected_components(
-                nodes, edges, strategy=strategy
-            ).collect()
-        }
-        assert got == want, strategy
+    # both paths must produce identical labels
+    driver, distributed = _components_both_paths(nodes, edges, monkeypatch)
+    assert driver == want
+    assert distributed == want
 
 
-def test_connected_components_strategies_agree_random(spark):
+def test_connected_components_strategies_agree_random(spark, monkeypatch):
     import random
 
     rng = random.Random(11)
@@ -92,17 +103,8 @@ def test_connected_components_strategies_agree_random(spark):
         (rng.randrange(n), rng.randrange(n)) for _ in range(90)
     ]
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    a = {
-        r.id: r.component
-        for r in connected_components(nodes, edges, strategy="driver").collect()
-    }
-    b = {
-        r.id: r.component
-        for r in connected_components(
-            nodes, edges, strategy="distributed"
-        ).collect()
-    }
-    assert a == b
+    driver, distributed = _components_both_paths(nodes, edges, monkeypatch)
+    assert driver == distributed
 
 
 def test_number_clusters_singletons_minus_one(spark):

@@ -216,12 +216,14 @@ def test_train_survives_fewer_distinct_vectors_than_k(spark):
     assert cents2 == [[0.0] * 4, [1.0] * 4]
 
 
-def test_broadcast_assign_probe_match_literal_path(spark, sf_dir):
-    """The broadcast-centroid strategy must reproduce the literal path
-    bit-for-bit (same argmin ties, same probe ranking) on a config where
-    both run."""
+def test_size_rule_paths_match_literal_path(spark, sf_dir, monkeypatch):
+    """Past _MAX_LITERAL_TERMS, assign_cells takes the Arrow numpy kernel
+    and probe_cells the one-row centroid broadcast; both must reproduce
+    the literal path bit-for-bit (same argmin ties, same probe ranking).
+    The cap is lowered so one small config runs on both sides of it."""
     import random
 
+    from vector_search_test_spark.operators import ivf
     from vector_search_test_spark.operators.ivf import assign_cells, probe_cells
 
     rng = random.Random(3)
@@ -229,36 +231,29 @@ def test_broadcast_assign_probe_match_literal_path(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.slice("embedding", 1, 8).alias("embedding")
     )
-    lit = {
-        (r.vec_id, r.list_id)
-        for r in assign_cells(emb, cents, strategy="literal").collect()
-    }
-    bc = {
-        (r.vec_id, r.list_id)
-        for r in assign_cells(emb, cents, strategy="broadcast").collect()
-    }
-    assert lit == bc
-
-    # the Arrow numpy kernel (auto-picked past the literal cap) must
-    # match too — per-dimension left-to-right float64 accumulation is
-    # the same summation order, argmin takes the first minimum
-    ar = {
-        (r.vec_id, r.list_id)
-        for r in assign_cells(emb, cents, strategy="arrow").collect()
-    }
-    assert lit == ar
-
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    plit = {
-        (r.query_id, r.list_id)
-        for r in probe_cells(q, cents, nprobe=3, strategy="literal").collect()
-    }
-    pbc = {
-        (r.query_id, r.list_id)
-        for r in probe_cells(q, cents, nprobe=3, strategy="broadcast").collect()
-    }
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def run(past_cap):
+        assigned = assign_cells(emb, cents)
+        probed = probe_cells(q, cents, nprobe=3)
+        assert ("MapInPandas" in plan(assigned)) == past_cap
+        assert ("Join Cross" in plan(probed)) == past_cap
+        return (
+            {(r.vec_id, r.list_id) for r in assigned.collect()},
+            {(r.query_id, r.list_id) for r in probed.collect()},
+        )
+
+    lit, plit = run(False)  # 96 terms: literal assign and probe
+    monkeypatch.setattr(ivf, "_MAX_LITERAL_TERMS", 8 * 12 - 1)
+    ar, pbc = run(True)
+    # per-dimension left-to-right float64 accumulation is the same
+    # summation order as the fold; argmin takes the first minimum
+    assert lit == ar
     assert plit == pbc
 
 

@@ -85,26 +85,6 @@ def test_salted_topk_equals_plain_window(spark):
         assert got == want
 
 
-def test_knn_exact_unbroadcast_matches_broadcast(spark, sf_dir):
-    """The broadcast=False escape hatch (for oversized query sets) must
-    produce identical results to the broadcast path."""
-    from vector_search_test_spark.io import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = sorted(
-        (r.query_id, r.vec_id, round(r.dist, 9))
-        for r in knn_exact(queries, emb, k=3, broadcast=True).collect()
-    )
-    b = sorted(
-        (r.query_id, r.vec_id, round(r.dist, 9))
-        for r in knn_exact(queries, emb, k=3, broadcast=False).collect()
-    )
-    assert a == b and len(a) == 15
-
-
 def test_knn_exact_arrow_bit_identical(spark, sf_dir):
     """The Arrow scorer must reproduce knn_exact bit-for-bit (same
     per-dimension left-to-right float64 summation as the l2_sq fold)."""

@@ -173,53 +173,37 @@ def test_contamination_matches_duckdb(spark, sf_dir):
 
 
 def test_contamination_plan_broadcasts_benchmark(spark, sf_dir):
-    """Scale shape. Kernel form (default): ONE scan through the Arrow
-    kernel — no join, no gram explode, no Exchange anywhere (the
-    benchmark set rides the task closure); expression form: the
-    benchmark shingle set is broadcast into the membership join (never
-    a shuffle join), totals and hits come from ONE aggregation (no
-    second join), and the only Exchange carries post-aggregation
-    (id, counts) rows."""
+    """Scale shape: ONE scan through the Arrow kernel — no join, no gram
+    explode, no Exchange anywhere (the benchmark set rides the task
+    closure)."""
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") < 5).select("text")
     plan = _plan(contamination_report(docs, bench, n=3))
     assert "MapInPandas" in plan
     assert "Generate" not in plan and "Join" not in plan
-    expr_plan = _plan(contamination_report(docs, bench, n=3, kernel=False))
-    assert "BroadcastHashJoin" in expr_plan
-    assert "SortMergeJoin" not in expr_plan and "ShuffledHashJoin" not in expr_plan
-    assert expr_plan.count("BroadcastHashJoin") == 1
 
 
-def test_contamination_kernel_matches_expression(spark, sf_dir):
-    """The Arrow kernel and the expression form are value-identical on
-    the fixture corpus — including a NULL text (the [NULL] shingle: one
-    counted row, never a hit) and a short-document whole-text gram."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .limit(200)
-        .union(
-            spark.createDataFrame(
-                [(90001, None), (90002, "one two")], "doc_id long, text string"
-            )
-        )
+def test_contamination_null_and_short_documents(spark):
+    """Edge rows the fixture corpus lacks: a NULL text is the [NULL]
+    shingle (one counted row, never a hit); a document shorter than n
+    tokens is one whole-text gram, and it hits a benchmark text equal
+    to it."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, "one two"), (3, "Three four five six")],
+        "doc_id long, text string",
     )
-    bench = docs.filter(F.col("doc_id") < 5).select("text")
-    key = lambda r: (r.id, r.n_shingles, r.n_hits, r.overlap, r.contaminated)
-    got = sorted(
-        key(r)
+    bench = spark.createDataFrame(
+        [("one two",), ("three four five",)], "text string"
+    )
+    got = {
+        r.id: (r.n_shingles, r.n_hits, r.overlap, r.contaminated)
         for r in contamination_report(docs, bench, n=3, threshold=0.5).collect()
-    )
-    want = sorted(
-        key(r)
-        for r in contamination_report(
-            docs, bench, n=3, threshold=0.5, kernel=False
-        ).collect()
-    )
-    assert got == want
-    by_id = {t[0]: t for t in got}
-    assert by_id[90001][1:3] == (1, 0)
+    }
+    assert got == {
+        1: (1, 0, 0.0, False),
+        2: (1, 1, 1.0, True),
+        3: (2, 1, 0.5, True),
+    }
 
 
 def test_hash_split_rejects_bad_weights(spark, sf_dir):

@@ -102,7 +102,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "id",
     max_iter: int = 50,
-    strategy: str = "auto",
 ) -> DataFrame:
     """G2 — connected components (app.py:96).
 
@@ -110,24 +109,18 @@ def connected_components(
     (either orientation). Returns (id, component) where component = min
     node id in the component.
 
-    strategy='driver' (auto-picked when the edge list is small): collect
-    edges, union-find on the driver, broadcast the (node -> component)
-    map back over the distributed node set — one join, no iteration.
-    strategy='distributed': the min-label-propagation + pointer-jumping
-    loop below — the 100 TB path, O(log diameter) checkpointed rounds.
-    Both produce identical labels (min id per component).
+    Edge lists of at most _DRIVER_MAX_EDGES rows: collect edges,
+    union-find on the driver, broadcast the (node -> component) map back
+    over the distributed node set — one join, no iteration. Larger: the
+    min-label-propagation + pointer-jumping loop below — the 100 TB
+    path, O(log diameter) checkpointed rounds. Both produce identical
+    labels (min id per component).
     """
-    if strategy == "auto":
-        # materialize once: the sizing count and the chosen strategy both
-        # re-read the edges, and the upstream pipeline (kNN join +
-        # window) is far too expensive to execute twice
-        edges = edges.select("src", "dst").localCheckpoint()
-        strategy = (
-            "driver"
-            if edges.count() <= _DRIVER_MAX_EDGES
-            else "distributed"
-        )
-    if strategy == "driver":
+    # materialize once: the sizing count and the chosen path both re-read
+    # the edges, and the upstream pipeline (kNN join + window) is far too
+    # expensive to execute twice
+    edges = edges.select("src", "dst").localCheckpoint()
+    if edges.count() <= _DRIVER_MAX_EDGES:
         comp = _driver_components(edges)
         ids = nodes.select(F.col(id_col).cast("long").alias("id"))
         if not comp:
@@ -138,13 +131,8 @@ def connected_components(
         return ids.join(F.broadcast(mapping), "id", "left").select(
             "id", F.coalesce("__label", "id").alias("component")
         )
-    if strategy != "distributed":
-        raise ValueError(
-            f"strategy must be auto|driver|distributed, got {strategy!r}"
-        )
-    # Materialize the edge list ONCE: without this, every iteration's join
-    # re-executes the whole upstream pipeline that produced the edges
-    # (kNN join, distance, window) — the dominant cost in practice.
+    # Materialize the symmetrized edge list ONCE, so every iteration's
+    # join reads both orientations without re-running the union.
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()

@@ -16,10 +16,10 @@ Spark-first mapping (SURVEY §2.4/§2.5, §4 X1/X2):
   shuffle, no Python (the reference caps nlist at 10, app.py:220; the
   distances use the HOF fold, not unrolled codegen — see _centroid_dists
   for the measured JIT-limit rationale). Past _MAX_LITERAL_TERMS,
-  `assign_cells`/`probe_cells` auto-switch to the one-row centroid
-  broadcast (`pack_centroids`): the same argmin over a broadcast
-  array column — still shuffle-free, with a kilobyte plan at nlist ~ 1e5
-  instead of a megabyte literal tree.
+  `assign_cells` switches to an Arrow-batched numpy argmin with the
+  matrix in a SparkContext broadcast, and `probe_cells` to the one-row
+  centroid broadcast (`pack_centroids`): both shuffle-free, with a
+  kilobyte plan at nlist ~ 1e5 instead of a megabyte literal tree.
 - layout (X1): postings are written `partitionBy("list_id")`, so a probe
   filter `list_id IN (...)` is *static partition pruning* — only
   nprobe/nlist of the files are ever read, the Spark replay of faiss
@@ -57,9 +57,10 @@ from vector_search_test_spark.functions.vector import (
 DEFAULT_SEED = 42
 
 # Above this many literal cells (nlist * dim) the centroid matrix stops
-# riding the plan as a literal array and switches to the one-row
-# broadcast (`pack_centroids`): a 1e5 x 64 literal is megabytes of plan
-# tree per query — serialization, analysis, and UI all choke on it.
+# riding the plan as a literal array (assignment moves to the Arrow
+# kernel, probing to the one-row `pack_centroids` broadcast): a 1e5 x 64
+# literal is megabytes of plan tree per query — serialization, analysis,
+# and UI all choke on it.
 _MAX_LITERAL_TERMS = 16384
 
 
@@ -98,7 +99,7 @@ def _centroid_literal(centroids: list[list[float]]) -> Column:
 def centroids_df(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
     """The centroid set as a (list_id int, centroid array<float>) table —
     the same layout ivf_save persists, and the input `pack_centroids`
-    expects for the broadcast assign/probe path."""
+    expects for the broadcast probe path."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     return spark.createDataFrame(rows, "list_id int, centroid array<float>")
 
@@ -107,12 +108,13 @@ def pack_centroids(cents: DataFrame) -> DataFrame:
     """Collapse a centroid table into ONE row holding the whole matrix as
     `__cents: array<array<float>>`, ordered by list_id.
 
-    This is the scale path for large nlist (SURVEY §4 X2): instead of
-    embedding nlist*dim literals into every plan (a plan-serialization
-    death at nlist ~ 1e4-1e5), the matrix rides a one-row broadcast —
+    This is probe_cells' scale path for large nlist (SURVEY §4 X2):
+    instead of embedding nlist*dim literals into every plan (a
+    plan-serialization death at nlist ~ 1e4-1e5), the matrix rides a
+    one-row broadcast —
     `df.crossJoin(broadcast(packed))` is a BroadcastNestedLoopJoin that
     adds one array column to every row with no shuffle and no literal
-    blow-up, and the argmin/rank expressions evaluate against it exactly
+    blow-up, and the probe-ranking expressions evaluate against it exactly
     as they do against the literal form. array_sort on (list_id, centroid)
     structs pins the order (collect_list alone is partition-order
     nondeterministic), so cell ids mean the same thing on every path.
@@ -131,18 +133,11 @@ def _with_packed(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     return df.crossJoin(F.broadcast(packed))
 
 
-def _resolve_strategy(
-    strategy: str, nlist: int, dim: int, allow_arrow: bool = False
-) -> str:
-    if strategy == "auto":
-        if nlist * dim <= _MAX_LITERAL_TERMS:
-            return "literal"
-        return "arrow" if allow_arrow else "broadcast"
-    if strategy not in ("literal", "broadcast", "arrow"):
-        raise ValueError(
-            f"strategy must be auto|literal|broadcast|arrow, got {strategy!r}"
-        )
-    return strategy
+def _fits_literal(centroids: list[list[float]]) -> bool:
+    """True when the centroid matrix is small enough to ride the plan as
+    a literal (nlist * dim <= _MAX_LITERAL_TERMS)."""
+    dim = len(centroids[0]) if centroids else 0
+    return len(centroids) * dim <= _MAX_LITERAL_TERMS
 
 
 def _centroid_dists(vec: Column, centroids: list[list[float]]) -> Column:
@@ -459,33 +454,23 @@ def assign_cells(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     out_col: str = "list_id",
-    strategy: str = "auto",
 ) -> DataFrame:
     """I2 — nearest-centroid assignment (reference app.py:55 `index.add`).
 
-    strategy='literal' (small nlist): distances to all centroids via
-    unrolled literal expressions, argmin via array_position(array_min) —
-    a pure whole-stage-codegen projection, zero shuffle, zero joins.
-    strategy='broadcast' (large nlist): the centroid matrix rides a
-    one-row broadcast (`pack_centroids`) instead of plan literals; the
-    same argmin evaluates against the broadcast array column — still
-    zero shuffle, and the plan stays kilobytes at nlist ~ 1e5.
-    'auto' picks by nlist*dim against the codegen unroll cap. Both
-    strategies sum distances left-to-right, so assignments are identical.
+    Small nlist*dim (<= _MAX_LITERAL_TERMS): distances to all centroids
+    via the HOF fold over the literal centroid matrix (`_centroid_dists`),
+    argmin via array_position(array_min) — a pure whole-stage-codegen
+    projection, zero shuffle, zero joins. Larger: the Arrow-batched numpy
+    argmin (`_assign_cells_arrow`), the matrix shipped as a SparkContext
+    broadcast instead of plan literals — still zero shuffle, and the plan
+    stays kilobytes at nlist ~ 1e5. Both sum distances left-to-right and
+    take the first minimum, so assignments are identical.
     """
-    nlist = len(centroids)
-    dim = len(centroids[0]) if centroids else 0
-    resolved = _resolve_strategy(strategy, nlist, dim, allow_arrow=True)
-    if resolved == "literal":
-        dists = _centroid_dists(F.col(vec_col), centroids)
-        cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        return df.withColumn(out_col, cell)
-    if resolved == "arrow":
+    if not _fits_literal(centroids):
         return _assign_cells_arrow(df, centroids, vec_col, out_col)
-    joined = _with_packed(df, centroids)
-    dists = F.transform(F.col("__cents"), lambda c: l2_sq(c, F.col(vec_col)))
+    dists = _centroid_dists(F.col(vec_col), centroids)
     cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return joined.withColumn(out_col, cell).drop("__cents")
+    return df.withColumn(out_col, cell)
 
 
 def _assign_cells_arrow(
@@ -495,13 +480,13 @@ def _assign_cells_arrow(
     out_col: str,
 ) -> DataFrame:
     """Large-nlist assignment via Arrow-batched numpy — the r16 scale
-    path for nlist*dim past the codegen unroll cap (guide §4.2: hand
-    whole batches to a vectorized native kernel instead of evaluating
-    nlist interpreted HOF folds per row — the broadcast-strategy form
-    spends ~rows * nlist * dim boxed fold steps, measured ~9 s at
+    path for nlist*dim past the literal cap (guide §4.2: hand whole
+    batches to a vectorized native kernel instead of evaluating nlist
+    interpreted HOF folds per row — the fold over a broadcast centroid
+    column spends ~rows * nlist * dim boxed fold steps, measured ~9 s at
     40k x 300 x 64 vs ~1 s here).
 
-    Bit-identical cells to the literal/broadcast strategies: distances
+    Bit-identical cells to the literal path: distances
     accumulate per-DIMENSION left-to-right in float64 over exactly
     widened float32 elements — the l2_sq fold's summation order, the
     knn_exact_arrow precedent — NOT via matmul (whose pairwise
@@ -509,7 +494,7 @@ def _assign_cells_arrow(
     minimum like array_position(array_min). The centroid matrix ships
     as a Python broadcast (fetched once per worker, not per task —
     at nlist ~ 1e5 x dim 64 the matrix is ~50 MB, too big for a task
-    closure). Equivalence vs the JVM strategies is pinned in
+    closure). Equivalence vs the literal path is pinned in
     tests/test_ivf.py."""
     import numpy as np
 
@@ -544,7 +529,6 @@ def probe_cells(
     centroids: list[list[float]],
     nprobe: int,
     query_vec_col: str = "query_vec",
-    strategy: str = "auto",
     with_rank: bool = False,
 ) -> DataFrame:
     """Per-query probe set: the nprobe cells nearest each query vector.
@@ -552,8 +536,9 @@ def probe_cells(
     Native plan: zip (distance, cell_id), array_sort (sorts by distance,
     ties by cell id), slice nprobe, explode -> one (query row, list_id) per
     probed cell. Mirrors faiss's quantizer ranking at app.py:69-70.
-    Large nlist rides the one-row centroid broadcast instead of a literal
-    matrix (see assign_cells), with the identical ranking expressions.
+    Past _MAX_LITERAL_TERMS the matrix rides the one-row centroid
+    broadcast (`pack_centroids`) instead of a literal, with the identical
+    ranking expressions.
 
     `with_rank=True` additionally emits `probe_rank` (0-based position
     in the per-query ranking) — a cell is in the nprobe=p probe set iff
@@ -562,8 +547,7 @@ def probe_cells(
     """
     nlist = len(centroids)
     nprobe = max(1, min(nprobe, nlist))
-    dim = len(centroids[0]) if centroids else 0
-    if _resolve_strategy(strategy, nlist, dim) == "literal":
+    if _fits_literal(centroids):
         dists = _centroid_dists(F.col(query_vec_col), centroids)
         out = queries
     else:
@@ -607,6 +591,18 @@ class IvfIndex:
         return self.postings.count()
 
 
+def _postings(
+    df: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str
+) -> DataFrame:
+    """(list_id, vec_id, embedding) postings rows for `df` against the
+    given centroids — the add step shared by build, add and append."""
+    return assign_cells(
+        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+        centroids,
+        vec_col="embedding",
+    ).select("list_id", "vec_id", "embedding")
+
+
 def ivf_build(
     corpus: DataFrame,
     nlist: int,
@@ -629,11 +625,7 @@ def ivf_build(
 
     corpus = spread(corpus)
     cents = train_centroids(corpus, nlist, vec_col=vec_col, seed=seed, max_iter=max_iter)
-    postings = assign_cells(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
-        cents,
-        vec_col="embedding",
-    ).select("list_id", "vec_id", "embedding")
+    postings = _postings(corpus, cents, id_col, vec_col)
     return IvfIndex(centroids=cents, postings=postings)
 
 
@@ -648,11 +640,7 @@ def ivf_add(
     postings — no retrain (faiss's train/add split; the streaming twin is
     streaming/ingest.py::stream_assign_cells). Returns a new IvfIndex
     sharing the centroids."""
-    new_posts = assign_cells(
-        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
-        index.centroids,
-        vec_col="embedding",
-    ).select("list_id", "vec_id", "embedding")
+    new_posts = _postings(df, index.centroids, id_col, vec_col)
     return IvfIndex(
         centroids=index.centroids, postings=index.postings.unionByName(new_posts)
     )
@@ -664,11 +652,7 @@ def ivf_append(index: IvfIndex, path: str, df: DataFrame,
     centroids and append into the partitioned postings layout (new files
     land inside the matching list_id= directories; readers pick them up
     with no compaction step)."""
-    new_posts = assign_cells(
-        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
-        index.centroids,
-        vec_col="embedding",
-    ).select("list_id", "vec_id", "embedding")
+    new_posts = _postings(df, index.centroids, id_col, vec_col)
     new_posts.write.mode("append").partitionBy("list_id").parquet(
         os.path.join(path, "postings")
     )

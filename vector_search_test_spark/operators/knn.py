@@ -119,7 +119,6 @@ def knn_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     metric: str = "l2_sq",
-    broadcast: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors in `corpus` for every row of `queries`.
@@ -128,11 +127,11 @@ def knn_exact(
     app.py:85, made exact (nprobe = nlist). Output: (query_id, vec_id,
     dist), ≤ k rows per query, deterministic tie-break on vec_id.
 
-    `broadcast=True` assumes the query side fits in executor memory
+    The query side is broadcast, so it must fit in executor memory
     (spark.sql.autoBroadcastJoinThreshold does not apply to an explicit
-    hint — an oversized query set will OOM). For a large query set pass
-    broadcast=False (plain cross join, shuffled) or use the IVF path
-    (operators/ivf.py), which prunes by cell instead of scoring all pairs.
+    hint — an oversized query set will OOM). For a large query set use
+    the IVF path (operators/ivf.py), which prunes by cell instead of
+    scoring all pairs.
 
     Pass `dim` (the embedding width) to score with the unrolled codegen
     expression instead of the interpreted HOF — same doubles, ~8x faster
@@ -148,7 +147,7 @@ def knn_exact(
         dist, asc = l2_sq_unrolled("__qv", vec_col, dim), True
     else:
         dist, asc = _distance(metric, F.col("__qv"), F.col(vec_col))
-    scored = corpus.join(F.broadcast(q) if broadcast else q).select(
+    scored = corpus.join(F.broadcast(q)).select(
         "query_id", F.col(id_col).alias("vec_id"), dist.alias("dist")
     )
     order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("vec_id").asc()]
@@ -169,7 +168,6 @@ def range_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     metric: str = "l2_sq",
-    broadcast: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
     """ALL neighbors within `radius` of every query — faiss's
@@ -193,7 +191,7 @@ def range_search(
         dist, asc = l2_sq_unrolled("__qv", vec_col, dim), True
     else:
         dist, asc = _distance(metric, F.col("__qv"), F.col(vec_col))
-    scored = corpus.join(F.broadcast(q) if broadcast else q).select(
+    scored = corpus.join(F.broadcast(q)).select(
         "query_id", F.col(id_col).alias("vec_id"), dist.alias("dist")
     )
     pred = (
@@ -388,7 +386,7 @@ def knn_exact_arrow(
     summation differs in the last ulp).
 
     The query side is collected to the driver and shipped in the task
-    closure (same smallness contract as knn_exact's broadcast=True).
+    closure (same smallness contract as knn_exact's query broadcast).
     """
     import numpy as np
 

@@ -575,7 +575,6 @@ def contamination_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
-    kernel: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: for each document, the fraction of its
     distinct word n-gram shingles that appear anywhere in the benchmark
@@ -585,46 +584,24 @@ def contamination_report(
 
     Plan shape (the 100 TB story): the benchmark's DISTINCT shingle set
     is bounded (benchmark suites are MBs against a corpus of TBs) and
-    ships to every task; the corpus side is ONE scan. With
-    `kernel=True` (default) the per-doc (n_shingles, n_hits) pair is
-    computed by an Arrow batch kernel against the task-local benchmark
-    set — tokenization (lower + single-space split) stays JVM-side so
-    its semantics cannot drift from the expression form; the kernel
-    only joins the identical token code points into gram strings and
-    counts distinct grams / set membership, exactly the
-    count(*)/count(hit) pair of the expression plan (r17: the
-    expression form ran the whole interpreted HOF gram chain inside a
-    Generate and re-aggregated the exploded rows — one kernel scan
-    replaces explode + broadcast join + two HashAggregates + the id
-    Exchange, ~3x at sf0.1). `kernel=False` keeps the pure-expression
-    form: explode + broadcast LEFT OUTER join + one partial-aggregated
-    count — the right trade for micro-batch callers where per-task
-    Arrow setup outweighs the interpreted fold. Both forms are
-    value-identical by construction (pytest-pinned): a NULL text yields
-    the single [NULL] shingle, counted in n_shingles and never a hit."""
+    ships to every task; the corpus side is ONE scan. The per-doc
+    (n_shingles, n_hits) pair is computed by an Arrow batch kernel
+    against the task-local benchmark set — tokenization (lower +
+    single-space split) stays JVM-side, shared with `shingles`; the
+    kernel only joins the token code points into gram strings and counts
+    distinct grams / set membership — one kernel scan instead of an
+    interpreted HOF gram chain inside a Generate, a broadcast join, two
+    HashAggregates and an id Exchange (measured ~3x faster at sf0.1, r17).
+    Values match the DuckDB twin (pytest-pinned). A NULL text
+    yields the single [NULL] shingle, counted in n_shingles and never a
+    hit."""
     bench_sh = (
         benchmark.select(F.explode(shingles(bench_text_col, n)).alias("s"))
         .distinct()
     )
-    if kernel:
-        agg = _contamination_counts_kernel(
-            docs, bench_sh, n=n, id_col=id_col, text_col=text_col
-        )
-    else:
-        doc_sh = docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(shingles(text_col, n)).alias("s"),
-        )
-        agg = (
-            doc_sh.join(
-                F.broadcast(bench_sh.withColumn("hit", F.lit(1))), "s", "left"
-            )
-            .groupBy("id")
-            .agg(
-                F.count("*").alias("n_shingles"),
-                F.count("hit").alias("n_hits"),
-            )
-        )
+    agg = _contamination_counts_kernel(
+        docs, bench_sh, n=n, id_col=id_col, text_col=text_col
+    )
     overlap = F.col("n_hits") / F.col("n_shingles")
     return agg.withColumn("overlap", F.round(overlap, 6)).withColumn(
         "contaminated", overlap >= F.lit(float(threshold))
@@ -641,15 +618,13 @@ def _contamination_counts_kernel(
     """(id, n_shingles, n_hits) via one Arrow kernel scan of the corpus.
 
     The benchmark shingle set is collected once (bounded by the
-    benchmark suite's size — the same rows the expression form
-    materializes on the driver as a broadcast relation) and closed over
-    by the kernel, so each task holds exactly one Python set. Gram
-    semantics replicate grams_of + array_distinct: every n-token window
-    joined with ' ' (whole text when shorter than n tokens), first-
-    occurrence-distinct; set membership is Python string equality =
-    UTF8 byte equality = Spark string equality. A NULL token array
-    (NULL text) is the expression form's [NULL] shingle: one counted
-    row, never a hit."""
+    benchmark suite's size) and closed over by the kernel, so each task
+    holds exactly one Python set. Gram semantics replicate grams_of +
+    array_distinct: every n-token window joined with ' ' (whole text
+    when shorter than n tokens), first-occurrence-distinct; set
+    membership is Python string equality = UTF8 byte equality = Spark
+    string equality. A NULL token array (NULL text) is `shingles`'
+    [NULL] shingle: one counted row, never a hit."""
     import pandas as pd
 
     from vector_search_test_spark.operators.dedup import tokens

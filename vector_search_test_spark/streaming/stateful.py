@@ -104,17 +104,13 @@ def _gap_horizon_ms(end_us: int, gap_seconds: int) -> int:
 
 
 def make_session_core(gap_seconds: int):
-    """The pure-numpy sessionization core SHARED by sessionize_buffered
-    (applyInPandasWithState) and streaming/tws.py's SessionizeProcessor
-    (transformWithStateInPandas) — ONE implementation of the gap rule,
-    the horizon arithmetic, the watermark-finality prefix, and the
-    NULL-sum semantics, so the two operators cannot drift (VERDICT r12
-    next-#4: with the core shared, only tws's protobuf protocol layer
-    is environment-gated; everything else is exercised by the buffered
-    operator's oracle plus the direct-drive processor tests).
+    """The pure-numpy sessionization core of sessionize_buffered: the
+    gap rule, the horizon arithmetic, the watermark-finality prefix, and
+    the NULL-sum semantics, kept apart from the applyInPandasWithState
+    state protocol that feeds it.
 
-    Returned as a FACTORY-LOCAL closure on purpose: both operators ship
-    their per-key functions to Python workers via cloudpickle, and a
+    Returned as a FACTORY-LOCAL closure on purpose: the operator ships
+    its per-key function to Python workers via cloudpickle, and a
     `<locals>` function pickles by VALUE (no package install needed on
     the workers), whereas a module-level helper would pickle by
     reference and require this package on every executor's PYTHONPATH.
@@ -388,8 +384,8 @@ def sessionize_buffered(
             if state.exists:
                 state.remove()
             return
-        # the shared session core (gap rule, horizons, finality prefix,
-        # NULL-sum semantics) — ONE implementation with streaming/tws.py
+        # the session core (gap rule, horizons, finality prefix,
+        # NULL-sum semantics)
         emit, keep_us, keep_v, next_timer_ms = core(buf_us, buf_v, wm)
         if keep_us.size:
             state.update((keep_us.tolist(), keep_v.tolist()))
@@ -498,7 +494,6 @@ def stream_sessionize(
     nanos_ts: bool = False,
     final_flush: bool = False,
     watermark_delay_seconds: int | None = None,
-    backend: str = "apws",
 ) -> DataFrame:
     """File-stream wrapper: events parquet directory -> session aggregates.
 
@@ -522,10 +517,6 @@ def stream_sessionize(
       filter late input rows for `applyInPandasWithState` — the explicit
       drop is what keeps emitted sessions final). Combine with
       `final_flush=True` for full-drain backfills.
-    - `backend="tws"` (with `watermark_delay_seconds`): same buffered
-      semantics on the transformWithStateInPandas v2 API (streaming/
-      tws.py — typed ListState + first-class event-time timers; needs the
-      RocksDB state store, which the operator configures).
     """
     from vector_search_test_spark.streaming.ingest import events_stream_reader
 
@@ -535,14 +526,7 @@ def stream_sessionize(
             input_dir, gap_seconds, watermark_delay_seconds or 1
         )
     ev = events_stream_reader(spark, input_dir, max_files_per_trigger)
-    if backend == "tws":
-        from vector_search_test_spark.streaming.tws import sessionize_tws
-
-        if watermark_delay_seconds is None:
-            raise ValueError("backend='tws' requires watermark_delay_seconds")
-        ev = ev.withWatermark("ts", f"{watermark_delay_seconds} seconds")
-        out = sessionize_tws(ev, gap_seconds=gap_seconds)
-    elif watermark_delay_seconds is not None:
+    if watermark_delay_seconds is not None:
         ev = ev.withWatermark("ts", f"{watermark_delay_seconds} seconds")
         out = sessionize_buffered(ev, gap_seconds=gap_seconds)
     elif final_flush:
