@@ -173,7 +173,7 @@ def _partial_probe_centroids(sf_dir: str) -> list[list[float]]:
     vec_id (a canonical order independent of either engine's scan order),
     through the SAME seeded k-means++/Lloyd's kernel ivf_build's driver
     path uses (operators/ivf.py::_lloyd_numpy), then rounded to float32 —
-    the precision assign_cells/probe_cells see after their literal float
+    the precision assign_cells/probe_cells see after their float32
     cast — so both sides evaluate distances against bit-identical
     centroid values."""
     key = sf_dir.rstrip("/")
@@ -988,13 +988,13 @@ def _self_check_topk(out: DataFrame, n_queries: int, k: int) -> DataFrame:
 def _q_ivf_bignlist_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ANN bench config (bench-only; sits past the driver's
     50-entry correctness cap by design — it has no oracle): nlist=300 at
-    dim 64 is 19,200 literal terms > _MAX_LITERAL_TERMS, so assign_cells
-    selects the Arrow argmin kernel and probe_cells the one-row BROADCAST
-    centroid matrix — measured end-to-end (train -> assign -> batched
-    partial probe) instead of only equivalence-tested (VERDICT r3 #5).
-    The corpus is the embeddings table fanned out 8x with shifted ids so
-    assignment has real volume; equivalence of both paths vs the literal
-    path is pinned in tests/test_ivf.py."""
+    dim 64, a 19,200-float centroid matrix that assign_cells and
+    probe_cells ship as a broadcast to their Arrow kernels — measured
+    end-to-end (train -> assign -> batched partial probe) instead of
+    only equivalence-tested (VERDICT r3 #5). The corpus is the
+    embeddings table fanned out 8x with shifted ids so assignment has
+    real volume; the kernels' cells are pinned against the pure-Python
+    ranker at nlist 1000 in tests/test_ivf.py."""
     from vector_search_test_spark.io import spread
     from vector_search_test_spark.operators.ivf import (
         IvfIndex,

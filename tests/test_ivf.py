@@ -6,6 +6,7 @@ semantics: faiss IndexIVFFlat degenerates to exact search when all cells
 are probed, app.py:65-75). Recall at nprobe < nlist is pinned to a floor.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from vector_search_test_spark.io import load_table
@@ -216,45 +217,169 @@ def test_train_survives_fewer_distinct_vectors_than_k(spark):
     assert cents2 == [[0.0] * 4, [1.0] * 4]
 
 
-def test_size_rule_paths_match_literal_path(spark, sf_dir, monkeypatch):
-    """Past _MAX_LITERAL_TERMS, assign_cells takes the Arrow numpy kernel
-    and probe_cells the one-row centroid broadcast; both must reproduce
-    the literal path bit-for-bit (same argmin ties, same probe ranking).
-    The cap is lowered so one small config runs on both sides of it."""
+def _planted(nlist, dim, n_rows, seed):
+    """float32-valued centroids and rows with two planted exact ties:
+    cell nlist-1 duplicates cell 1, row 0 sits ON cell 1 (distance 0
+    to both copies), and row 1 is equidistant (exactly 0.25) from cells
+    2 and 3, its nearest pair."""
     import random
 
-    from vector_search_test_spark.operators import ivf
-    from vector_search_test_spark.operators.ivf import assign_cells, probe_cells
+    import numpy as np
 
-    rng = random.Random(3)
-    cents = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(12)]
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.slice("embedding", 1, 8).alias("embedding")
+    rng = random.Random(seed)
+
+    def vec():
+        return [float(np.float32(rng.uniform(-1, 1))) for _ in range(dim)]
+
+    cents = [vec() for _ in range(nlist)]
+    cents[-1] = list(cents[1])
+    mid = vec()
+    mid[0] = 0.25
+    cents[2] = [0.75] + mid[1:]
+    cents[3] = [-0.25] + mid[1:]
+    rows = [list(cents[1]), mid] + [vec() for _ in range(n_rows - 2)]
+    return cents, rows
+
+
+@pytest.mark.parametrize("nlist,dim", [(12, 8), (1000, 64)])
+def test_kernels_match_python_ranker(spark, nlist, dim):
+    """assign_cells and probe_cells (with and without rank) reproduce
+    the pure-Python ranker row for row at a small and a large nlist,
+    exact ties included: the first minimum / lowest cell id wins."""
+    from vector_search_test_spark.operators.ivf import (
+        assign_cells,
+        probe_cells,
+        rank_cells,
     )
-    q = emb.filter(F.col("vec_id") < 20).select(
+
+    cents, rows = _planted(nlist, dim, 24, seed=nlist)
+    emb = spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<float>"
+    )
+    q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    nprobe = 3
+    ranked = {i: rank_cells(v, cents, nprobe) for i, v in enumerate(rows)}
+    assert ranked[0][:2] == [1, nlist - 1] and ranked[1][:2] == [2, 3]
 
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
+    def argmin(v):
+        dists = [sum((a - b) ** 2 for a, b in zip(v, c)) for c in cents]
+        return dists.index(min(dists))
 
-    def run(past_cap):
-        assigned = assign_cells(emb, cents)
-        probed = probe_cells(q, cents, nprobe=3)
-        assert ("MapInPandas" in plan(assigned)) == past_cap
-        assert ("Join Cross" in plan(probed)) == past_cap
-        return (
-            {(r.vec_id, r.list_id) for r in assigned.collect()},
-            {(r.query_id, r.list_id) for r in probed.collect()},
-        )
+    got = {r.vec_id: r.list_id for r in assign_cells(emb, cents).collect()}
+    assert got == {i: argmin(v) for i, v in enumerate(rows)}
+    assert got[0] == 1 and got[1] == 2
+    got = sorted(
+        (r.query_id, r.list_id)
+        for r in probe_cells(q, cents, nprobe=nprobe).collect()
+    )
+    assert got == sorted((i, c) for i, cs in ranked.items() for c in cs)
+    got = sorted(
+        (r.query_id, r.probe_rank, r.list_id)
+        for r in probe_cells(q, cents, nprobe=nprobe, with_rank=True).collect()
+    )
+    assert got == sorted(
+        (i, p, c) for i, cs in ranked.items() for p, c in enumerate(cs)
+    )
 
-    lit, plit = run(False)  # 96 terms: literal assign and probe
-    monkeypatch.setattr(ivf, "_MAX_LITERAL_TERMS", 8 * 12 - 1)
-    ar, pbc = run(True)
-    # per-dimension left-to-right float64 accumulation is the same
-    # summation order as the fold; argmin takes the first minimum
-    assert lit == ar
-    assert plit == pbc
+
+# Edge inputs at the kernel boundary: (id, vector) with the vector
+# well-formed, NULL, short, empty, long, holding a NULL, holding a NaN
+_EDGE_CENTS = [[0.0, 0.0], [1.0, 1.0], [2.0, 0.0]]
+_EDGE_ROWS = [
+    (0, [0.9, 1.2]),
+    (1, None),
+    (2, [1.0]),
+    (3, []),
+    (4, [1.0, 1.0, 1.0]),
+    (5, [1.0, None]),
+    (6, [float("nan"), 1.0]),
+    (7, [1.0, 0.0]),  # equidistant from all three cells
+    (8, [2.0, 0.0]),
+]
+
+
+def _edge_frame(spark, id_col, vec_col, slices):
+    """The edge rows over `slices` partitions: more slices than rows
+    leaves some partitions empty and others holding a single row."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(_EDGE_ROWS, slices),
+        f"{id_col} long, {vec_col} array<float>",
+    )
+
+
+@pytest.mark.parametrize("slices", [1, 16])
+def test_assign_cells_edge_matrix(spark, slices):
+    """NULL, wrong-length and NULL/NaN-holding vectors get list_id NULL;
+    zero-row and single-row partitions pass through."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from vector_search_test_spark.operators.ivf import assign_cells
+
+    df = _edge_frame(spark, "vec_id", "embedding", slices)
+    got = (
+        assign_cells(df, _EDGE_CENTS)
+        .select("vec_id", "list_id")
+        .toPandas()
+        .sort_values("vec_id", ignore_index=True)
+    )
+    got["list_id"] = got["list_id"].astype("Int32")
+    want = pd.DataFrame(
+        {
+            "vec_id": range(9),
+            "list_id": pd.array(
+                [1, None, None, None, None, None, None, 0, 2], dtype="Int32"
+            ),
+        }
+    )
+    assert_frame_equal(got, want, check_dtype=False)
+    assert assign_cells(df.limit(0), _EDGE_CENTS).collect() == []
+
+
+@pytest.mark.parametrize("slices", [1, 16])
+def test_probe_cells_edge_matrix(spark, slices):
+    """Malformed query vectors probe no cell, so a batched search returns
+    no rows for them; zero-row and single-row partitions pass through."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from vector_search_test_spark.operators.ivf import (
+        IvfIndex,
+        assign_cells,
+        probe_cells,
+    )
+
+    q = _edge_frame(spark, "query_id", "query_vec", slices)
+    got = (
+        probe_cells(q, _EDGE_CENTS, nprobe=2, with_rank=True)
+        .select("query_id", "probe_rank", "list_id")
+        .toPandas()
+        .sort_values(["query_id", "probe_rank"], ignore_index=True)
+    )
+    want = pd.DataFrame(
+        {
+            "query_id": [0, 0, 7, 7, 8, 8],
+            "probe_rank": [0, 1, 0, 1, 0, 1],
+            "list_id": [1, 0, 0, 1, 2, 1],
+        }
+    )
+    assert_frame_equal(got, want, check_dtype=False)
+    assert probe_cells(q.limit(0), _EDGE_CENTS, nprobe=2).collect() == []
+
+    corpus = spark.createDataFrame(
+        [(i, v) for i, v in _EDGE_ROWS if i in (0, 7, 8)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = IvfIndex(
+        centroids=_EDGE_CENTS,
+        postings=assign_cells(corpus, _EDGE_CENTS).select(
+            "list_id", "vec_id", "embedding"
+        ),
+    )
+    hits = ivf_search_all(idx, q, k=3, nprobe=2).collect()
+    assert {r.query_id for r in hits} == {0, 7, 8}
 
 
 def test_ivf_search_wide_embedding_falls_back_interpreted(spark):

@@ -6,6 +6,7 @@ that becomes a shuffle, a window that loses its group-limit) fails CI
 even though results stay correct. Pinned against pyspark 4.1.2.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from vector_search_test_spark.io import load_table
@@ -48,9 +49,9 @@ def test_ivf_single_search_prunes_and_avoids_shuffle(spark, sf_dir):
     idx = ivf_build(emb, nlist=4)
     qvec = [float(x) for x in emb.first().embedding]
     plan = _plan(ivf_search(idx, qvec, k=5, nprobe=2))
-    # probe filter present (inlined through the assign projection on an
-    # in-memory index — the saved-index test pins pruning by name) and
-    # top-k without a shuffle
+    # probe filter present (above the assign kernel on an in-memory
+    # index — the saved-index test pins pruning by name) and top-k
+    # without a shuffle
     assert "Filter" in plan and "TakeOrderedAndProject" in plan
     # the SEARCH must add no exchange beyond what the build lineage
     # already carries (ivf_build's gated small-corpus spread is one)
@@ -104,48 +105,36 @@ def test_bucketed_postings_join_without_exchange(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_large_nlist_assign_broadcasts_centroids_not_literals(spark, sf_dir):
-    """Scale path: past the unroll cap the centroid matrix must ride a
-    broadcast — the Arrow argmin kernel ships it as a SparkContext
-    broadcast in the task closure (r16; the pre-r16 shape was a one-row
-    BroadcastNestedLoopJoin), never a literal tree that balloons plan
-    serialization at nlist~1e5. probe_cells keeps the relational
-    broadcast (its per-cell ranking is plan-side)."""
+@pytest.mark.parametrize("nlist,dim", [(4, 4), (1000, 64)])
+def test_assign_and_probe_plans_carry_no_centroid_matrix(spark, sf_dir, nlist, dim):
+    """Assignment and probing run ONE Arrow kernel at every nlist: the
+    centroid matrix ships as a SparkContext broadcast, never as a plan
+    literal or a broadcast join, and nothing shuffles. At nlist 1000 x
+    dim 64 a literal matrix would be 64k CAST terms in the plan text."""
     import random
 
     from vector_search_test_spark.operators.ivf import assign_cells, probe_cells
 
     rng = random.Random(7)
-    cents = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(1000)]
-    emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    out = assign_cells(emb, cents)  # 64k terms > cap -> Arrow kernel
-    plan = _plan(out)
-    assert "MapInPandas" in plan  # the Arrow argmin kernel
-    assert "Exchange hashpartitioning" not in plan  # still shuffle-free
-    # no literal blow-up: the 64k-float matrix must NOT be in the plan text
-    assert len(plan) < 100_000
-    probed = probe_cells(
-        emb.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        ),
-        cents,
-        nprobe=4,
-    )
-    pplan = _plan(probed)
-    assert "BroadcastNestedLoopJoin" in pplan
-    assert len(pplan) < 100_000
-
-
-def test_small_nlist_assign_stays_literal_projection(spark, sf_dir):
-    from vector_search_test_spark.operators.ivf import assign_cells
-
-    cents = [[float(i), 0.0, 0.0, 0.0] for i in range(4)]
+    cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(nlist)]
     emb = load_table(spark, sf_dir, "embeddings").limit(50).select(
-        "vec_id", F.slice("embedding", 1, 4).alias("embedding")
+        "vec_id", F.slice("embedding", 1, dim).alias("embedding")
     )
-    plan = _plan(assign_cells(emb, cents))
-    assert "Join" not in plan  # pure projection, no broadcast needed
+    q = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    for df in (
+        assign_cells(emb, cents),
+        probe_cells(q, cents, nprobe=4),
+        probe_cells(q, cents, nprobe=4, with_rank=True),
+    ):
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        executed = _plan(df)
+        assert "MapInPandas" in optimized
+        # no Join Cross / BroadcastNestedLoopJoin carrying a packed matrix
+        assert "Join" not in optimized and "Join" not in executed
+        assert "Exchange hashpartitioning" not in executed
+        assert len(optimized) < 100_000
 
 
 def test_top_fraction_never_sorts_the_corpus(spark, sf_dir):

@@ -509,9 +509,9 @@ def minhash_signature_table(
     2.40 -> 2.85, minhash_estimate_error 0.78 -> 1.12, and +0.4 on
     corpus_e2e_curation's near-dedup stage). The exploded projection
     is codegen'd integer multiply-adds the JVM does faster than the
-    (id, sh)-out / 17-columns-back Arrow round-trip costs; unlike
-    assign_cells (768M interpreted fold steps) there is no interpreted
-    HOF here to beat.
+    (id, sh)-out / 17-columns-back Arrow round-trip costs; unlike cell
+    assignment (whose HOF fold ran 768M interpreted steps) there is no
+    interpreted HOF here to beat.
     """
     from vector_search_test_spark.functions.hashing import minhash_member
 
@@ -1619,7 +1619,7 @@ def semdedup_prune(
     survivors, or lower tau to compensate for the extra pruning.
 
     Scale shape: nearest-centroid assignment is the scan-only
-    `assign_cells` projection; the centroid table is broadcast; the
+    `assign_cells` Arrow kernel; the centroid table is broadcast; the
     only corpus shuffles are the list_id window and the within-list
     self-join — O(sum of cluster_size^2) pair evaluations, never the
     global cross product. Centroids are supplied by the caller (the

@@ -360,7 +360,7 @@ def cluster_silhouette(
     restricted to the list.
 
     Scale shape: centroid distances are ONE scan-only projection over
-    the broadcast-sized centroid literal (the assign_cells machinery);
+    the small centroid literal (`ivf._centroid_dists`, the HOF fold);
     a, b come from array_sort of that nlist-length array; per-row
     contributions quantize to 1e-12 integers before the single narrow
     groupBy(list_id), so grouped sums are order-free and the DuckDB
@@ -444,7 +444,7 @@ def cluster_top_terms(
     replays it from a VALUES centroid table.
 
     Scale shape: nearest-centroid assignment is the scan-only
-    `assign_cells` projection; terms come from ONE lowercased split
+    `assign_cells` Arrow kernel; terms come from ONE lowercased split
     with per-doc array_distinct BEFORE the explode (document
     frequency, not occurrence count — and the explode is bounded by
     distinct terms per doc); the (list_id, term) aggregate does the

@@ -11,15 +11,10 @@ Spark-first mapping (SURVEY §2.4/§2.5, §4 X1/X2):
 
 - train (I1): MLlib KMeans with a pinned seed; the centroid set is tiny
   (nlist rows) and is kept as a driver-side list + a `centroids` table.
-- add (I2): cell assignment is an argmin over the centroid set embedded as
-  a *literal* array-of-arrays column — a single projection: no join, no
-  shuffle, no Python (the reference caps nlist at 10, app.py:220; the
-  distances use the HOF fold, not unrolled codegen — see _centroid_dists
-  for the measured JIT-limit rationale). Past _MAX_LITERAL_TERMS,
-  `assign_cells` switches to an Arrow-batched numpy argmin with the
-  matrix in a SparkContext broadcast, and `probe_cells` to the one-row
-  centroid broadcast (`pack_centroids`): both shuffle-free, with a
-  kilobyte plan at nlist ~ 1e5 instead of a megabyte literal tree.
+- add (I2): cell assignment is an argmin over the centroid set inside
+  one Arrow-batched numpy kernel (`mapInPandas`); the matrix ships once
+  as a SparkContext broadcast, so the plan stays kilobytes at any nlist
+  — no join, no shuffle (the reference caps nlist at 10, app.py:220).
 - layout (X1): postings are written `partitionBy("list_id")`, so a probe
   filter `list_id IN (...)` is *static partition pruning* — only
   nprobe/nlist of the files are ever read, the Spark replay of faiss
@@ -27,11 +22,12 @@ Spark-first mapping (SURVEY §2.4/§2.5, §4 X1/X2):
 - search (Q2): rank cells driver-side over the tiny centroid list (same
   O(nlist) work faiss does in the quantizer), prune postings, exact
   squared-L2, `orderBy(dist).limit(k)` -> TakeOrderedAndProject.
-- batched search (Q3): per-query probe sets computed natively
-  (sort a zipped (dist, cell) array, slice nprobe, explode), equi-join
-  against postings on `list_id` (AQE skew-join splits hot cells), then a
-  per-query window top-k (WindowGroupLimit cuts each partition to k rows
-  per query before the shuffle).
+- batched search (Q3): per-query probe sets from the same kernel
+  (stable argsort of the query->centroid distances, first nprobe cells),
+  exploded natively, equi-join against postings on `list_id` (AQE
+  skew-join splits hot cells), then a per-query window top-k
+  (WindowGroupLimit cuts each partition to k rows per query before the
+  shuffle).
 
 With nprobe = nlist every cell is scanned, so results match the exact
 brute-force path bit-for-bit — that is the correctness gate; recall at
@@ -56,13 +52,6 @@ from vector_search_test_spark.functions.vector import (
 
 DEFAULT_SEED = 42
 
-# Above this many literal cells (nlist * dim) the centroid matrix stops
-# riding the plan as a literal array (assignment moves to the Arrow
-# kernel, probing to the one-row `pack_centroids` broadcast): a 1e5 x 64
-# literal is megabytes of plan tree per query — serialization, analysis,
-# and UI all choke on it.
-_MAX_LITERAL_TERMS = 16384
-
 
 def _centroid_literal(centroids: list[list[float]]) -> Column:
     """The centroid matrix as a literal array<array<float>> column.
@@ -70,8 +59,8 @@ def _centroid_literal(centroids: list[list[float]]) -> Column:
     Built as ONE F.expr call, not nlist*dim F.lit().cast() calls: the
     per-element form cost ~1.06 s of driver-side py4j round-trips per
     invocation at nlist=8 x dim=64 — the root cause of the r11->r12
-    drift on the quantized-search entries (every assign/probe pays
-    plan construction) — vs ~1 ms for the parsed string. Identical
+    drift on the quantized-search entries (every assign/probe then
+    paid plan construction) — vs ~1 ms for the parsed string. Identical
     expression nodes and bit-identical values (see the
     plan-construction note in functions/vector.py)."""
     import math
@@ -98,46 +87,9 @@ def _centroid_literal(centroids: list[list[float]]) -> Column:
 
 def centroids_df(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
     """The centroid set as a (list_id int, centroid array<float>) table —
-    the same layout ivf_save persists, and the input `pack_centroids`
-    expects for the broadcast probe path."""
+    the same layout ivf_save persists."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     return spark.createDataFrame(rows, "list_id int, centroid array<float>")
-
-
-def pack_centroids(cents: DataFrame) -> DataFrame:
-    """Collapse a centroid table into ONE row holding the whole matrix as
-    `__cents: array<array<float>>`, ordered by list_id.
-
-    This is probe_cells' scale path for large nlist (SURVEY §4 X2):
-    instead of embedding nlist*dim literals into every plan (a
-    plan-serialization death at nlist ~ 1e4-1e5), the matrix rides a
-    one-row broadcast —
-    `df.crossJoin(broadcast(packed))` is a BroadcastNestedLoopJoin that
-    adds one array column to every row with no shuffle and no literal
-    blow-up, and the probe-ranking expressions evaluate against it exactly
-    as they do against the literal form. array_sort on (list_id, centroid)
-    structs pins the order (collect_list alone is partition-order
-    nondeterministic), so cell ids mean the same thing on every path.
-    """
-    return cents.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("list_id", "centroid"))),
-            lambda s: s["centroid"],
-        ).alias("__cents")
-    )
-
-
-def _with_packed(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """df + the broadcast `__cents` matrix column (one-row BNLJ)."""
-    packed = pack_centroids(centroids_df(df.sparkSession, centroids))
-    return df.crossJoin(F.broadcast(packed))
-
-
-def _fits_literal(centroids: list[list[float]]) -> bool:
-    """True when the centroid matrix is small enough to ride the plan as
-    a literal (nlist * dim <= _MAX_LITERAL_TERMS)."""
-    dim = len(centroids[0]) if centroids else 0
-    return len(centroids) * dim <= _MAX_LITERAL_TERMS
 
 
 def _centroid_dists(vec: Column, centroids: list[list[float]]) -> Column:
@@ -153,6 +105,8 @@ def _centroid_dists(vec: Column, centroids: list[list[float]]) -> Column:
     see l2_sq_const call sites in knn.py / ivf_search — that method
     stays under the JIT limit and measured ~6x faster than the fold.
     Both forms sum identically (left-to-right), so values never differ.
+    The silhouette gauge (evaluate.py) reads it; assignment and probing
+    run the Arrow kernel `_map_cells`, which sums in the same order.
     """
     return F.transform(_centroid_literal(centroids), lambda c: l2_sq(c, vec))
 
@@ -449,6 +403,73 @@ def _train_mllib(
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
+# Rows of one Arrow batch scored together: bounds the kernel's
+# rows x nlist float64 distance block at 32 MB whatever nlist is.
+_KERNEL_CELLS = 1 << 22
+
+
+def _map_cells(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    out_col: str,
+    out_type,
+    pick,
+) -> DataFrame:
+    """df + `out_col`: `pick` applied to each row's distances to every
+    centroid, in one Arrow-batched numpy kernel (`mapInPandas`) — the
+    shared core of assign_cells and probe_cells.
+
+    `pick` maps a rows x nlist float64 distance block to a list of one
+    value per row. Distances accumulate per DIMENSION left-to-right in float64
+    over exactly widened float32 elements (centroids are rounded to
+    float32 first, as the stored centroid table holds them): the l2_sq
+    fold's summation order and `rank_cells`' arithmetic, NOT a matmul,
+    whose pairwise summation differs in the last ulp. The matrix ships
+    as a SparkContext broadcast (fetched once per worker; at nlist ~ 1e5
+    x dim 64 it is ~50 MB, too big for a task closure), so the plan
+    carries no centroid literal and no join.
+
+    A row whose distance is undefined — NULL vector, length != dim, or
+    a NULL/NaN element — gets `out_col` NULL."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    C = np.array(centroids, dtype=np.float32).astype(np.float64)
+    nlist, dim = C.shape
+    bc = df.sparkSession.sparkContext.broadcast(np.ascontiguousarray(C.T))
+    step = max(1, _KERNEL_CELLS // nlist)
+    schema = StructType(df.schema.fields + [StructField(out_col, out_type)])
+
+    def kernel(batches):
+        ct = bc.value
+        for pdf in batches:
+            vecs = pdf[vec_col]
+            ok = np.fromiter(
+                (v is not None and len(v) == dim for v in vecs), bool, len(pdf)
+            )
+            X = np.array(vecs[ok].tolist(), dtype=np.float64).reshape(-1, dim)
+            finite = ~np.isnan(X).any(axis=1)
+            ok[ok] = finite
+            X = X[finite]
+            vals = []
+            for s in range(0, max(len(X), 1), step):
+                xs = X[s : s + step]
+                acc = np.zeros((len(xs), nlist))
+                for i in range(dim):
+                    t = xs[:, i, None] - ct[i]
+                    acc += t * t
+                vals += pick(acc)
+            out = [None] * len(pdf)
+            for j, v in zip(np.flatnonzero(ok), vals):
+                out[j] = v
+            col = pd.Series(out, index=pdf.index, dtype=object)
+            yield pdf.assign(**{out_col: col})
+
+    return df.mapInPandas(kernel, schema)
+
+
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
@@ -457,71 +478,18 @@ def assign_cells(
 ) -> DataFrame:
     """I2 — nearest-centroid assignment (reference app.py:55 `index.add`).
 
-    Small nlist*dim (<= _MAX_LITERAL_TERMS): distances to all centroids
-    via the HOF fold over the literal centroid matrix (`_centroid_dists`),
-    argmin via array_position(array_min) — a pure whole-stage-codegen
-    projection, zero shuffle, zero joins. Larger: the Arrow-batched numpy
-    argmin (`_assign_cells_arrow`), the matrix shipped as a SparkContext
-    broadcast instead of plan literals — still zero shuffle, and the plan
-    stays kilobytes at nlist ~ 1e5. Both sum distances left-to-right and
-    take the first minimum, so assignments are identical.
+    One Arrow-batched numpy argmin per batch (`_map_cells`): zero
+    shuffle, zero joins, a kilobyte plan at any nlist. argmin takes the
+    FIRST minimum, so ties go to the lowest cell id, as in `rank_cells`.
+    A vector with no defined distance (NULL, wrong length, or holding a
+    NULL/NaN) gets `out_col` NULL.
     """
-    if not _fits_literal(centroids):
-        return _assign_cells_arrow(df, centroids, vec_col, out_col)
-    dists = _centroid_dists(F.col(vec_col), centroids)
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return df.withColumn(out_col, cell)
+    from pyspark.sql.types import IntegerType
 
-
-def _assign_cells_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Large-nlist assignment via Arrow-batched numpy — the r16 scale
-    path for nlist*dim past the literal cap (guide §4.2: hand whole
-    batches to a vectorized native kernel instead of evaluating nlist
-    interpreted HOF folds per row — the fold over a broadcast centroid
-    column spends ~rows * nlist * dim boxed fold steps, measured ~9 s at
-    40k x 300 x 64 vs ~1 s here).
-
-    Bit-identical cells to the literal path: distances
-    accumulate per-DIMENSION left-to-right in float64 over exactly
-    widened float32 elements — the l2_sq fold's summation order, the
-    knn_exact_arrow precedent — NOT via matmul (whose pairwise
-    summation differs in the last ulp), and argmin takes the FIRST
-    minimum like array_position(array_min). The centroid matrix ships
-    as a Python broadcast (fetched once per worker, not per task —
-    at nlist ~ 1e5 x dim 64 the matrix is ~50 MB, too big for a task
-    closure). Equivalence vs the literal path is pinned in
-    tests/test_ivf.py."""
-    import numpy as np
-
-    C = np.array([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    dim = C.shape[1]
-    bc = df.sparkSession.sparkContext.broadcast(C)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, IntegerType())]
+    return _map_cells(
+        df, centroids, vec_col, out_col, IntegerType(),
+        lambda d: d.argmin(axis=1).tolist(),
     )
-
-    def assign(batches):
-        cents = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            acc = np.zeros((X.shape[0], cents.shape[0]), dtype=np.float64)
-            for i in range(dim):
-                t = X[:, i, None] - cents[None, :, i]
-                acc += t * t
-            pdf = pdf.copy()
-            pdf[out_col] = acc.argmin(axis=1).astype(np.int32)
-            yield pdf
-
-    return df.mapInPandas(assign, out_schema)
 
 
 def probe_cells(
@@ -533,41 +501,34 @@ def probe_cells(
 ) -> DataFrame:
     """Per-query probe set: the nprobe cells nearest each query vector.
 
-    Native plan: zip (distance, cell_id), array_sort (sorts by distance,
-    ties by cell id), slice nprobe, explode -> one (query row, list_id) per
-    probed cell. Mirrors faiss's quantizer ranking at app.py:69-70.
-    Past _MAX_LITERAL_TERMS the matrix rides the one-row centroid
-    broadcast (`pack_centroids`) instead of a literal, with the identical
-    ranking expressions.
+    The kernel (`_map_cells`) emits ONE row per query carrying its
+    ranked probe cells — a stable argsort of the distances, so ties go
+    to the lowest cell id exactly as in `rank_cells` — and a native
+    explode yields one (query row, list_id) per probed cell. Mirrors
+    faiss's quantizer ranking at app.py:69-70. A query vector with no
+    defined distance (NULL, wrong length, or holding a NULL/NaN) probes
+    no cell, so searches return no rows for it.
 
-    `with_rank=True` additionally emits `probe_rank` (0-based position
-    in the per-query ranking) — a cell is in the nprobe=p probe set iff
-    probe_rank < p, which is what lets `ivf_search_curve` evaluate every
-    nprobe value from ONE ranked scan.
+    `with_rank=True` explodes with its position instead (posexplode),
+    adding `probe_rank` (0-based position in the per-query ranking) — a
+    cell is in the nprobe=p probe set iff probe_rank < p, which is what
+    lets `ivf_search_curve` evaluate every nprobe value from ONE ranked
+    scan.
     """
-    nlist = len(centroids)
-    nprobe = max(1, min(nprobe, nlist))
-    if _fits_literal(centroids):
-        dists = _centroid_dists(F.col(query_vec_col), centroids)
-        out = queries
-    else:
-        out = _with_packed(queries, centroids)
-        dists = F.transform(
-            F.col("__cents"), lambda c: l2_sq(c, F.col(query_vec_col))
-        )
-    cells = F.sequence(F.lit(0), F.lit(nlist - 1))
-    ranked = F.array_sort(
-        F.zip_with(dists, cells, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    nprobe = max(1, min(nprobe, len(centroids)))
+    ranked = _map_cells(
+        queries, centroids, query_vec_col, "__probes",
+        ArrayType(IntegerType(), False),
+        lambda d: list(d.argsort(axis=1, kind="stable")[:, :nprobe]),
     )
-    probes = F.transform(F.slice(ranked, 1, nprobe), lambda s: s["i"].cast("int"))
-    if with_rank:
-        cols = [c for c in out.columns if c != "__cents"]
-        out = out.select(
-            *cols, F.posexplode(probes).alias("probe_rank", "list_id")
-        )
-        return out
-    out = out.withColumn("list_id", F.explode(probes))
-    return out.drop("__cents") if "__cents" in out.columns else out
+    probes = (
+        F.posexplode("__probes").alias("probe_rank", "list_id")
+        if with_rank
+        else F.explode("__probes").alias("list_id")
+    )
+    return ranked.select(*queries.columns, probes)
 
 
 @dataclass
@@ -668,7 +629,8 @@ def rank_cells(
     centroid table. THE canonical probe-ranking kernel: ivf_search,
     IVF-PQ's LUT builder, and IVF-SQ8 all call this one function, so
     the ranking/tie-break semantics the oracles replay bit-for-bit
-    live in exactly one place."""
+    live in exactly one place; the batched probe_cells kernel is pinned
+    to it row for row (tests/test_ivf.py)."""
     scored = [
         (
             sum(

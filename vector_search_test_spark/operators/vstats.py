@@ -316,7 +316,10 @@ def label_shift_report(
     between the two label distributions (the standard drift scalar),
     readable per-label to localize WHICH classes moved. Counts are
     exact integers; shares are single double divisions of exact
-    counts, 6dp-rounded per output.
+    counts, 6dp-rounded per output except tvd_part, which stays
+    unrounded: parts rounded up by as much as 5e-7 each can sum past 1
+    (ref=[0], cur=[1,2,3] gave 1.000001), and the TVD must stay in
+    [0, 1].
 
     Plan: one map-side-combined count per side, a tiny full-outer
     join on the label, scalar totals broadcast back. Output
@@ -347,7 +350,7 @@ def label_shift_report(
         F.round(sr, 6).alias("share_ref"),
         F.round(sc, 6).alias("share_cur"),
         F.round(F.abs(sc - sr), 6).alias("share_shift"),
-        F.round(F.abs(sc - sr) / 2, 6).alias("tvd_part"),
+        (F.abs(sc - sr) / 2).alias("tvd_part"),
     )
 
 
@@ -379,8 +382,8 @@ SELECT label, n_ref, n_cur,
        round(n_cur / CAST(tc AS DOUBLE), 6) AS share_cur,
        round(abs(n_cur / CAST(tc AS DOUBLE) - n_ref / CAST(tr AS DOUBLE)),
              6) AS share_shift,
-       round(abs(n_cur / CAST(tc AS DOUBLE) - n_ref / CAST(tr AS DOUBLE))
-             / 2, 6) AS tvd_part
+       abs(n_cur / CAST(tc AS DOUBLE) - n_ref / CAST(tr AS DOUBLE))
+         / 2 AS tvd_part
 FROM j CROSS JOIN t
 """
 

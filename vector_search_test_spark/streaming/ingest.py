@@ -150,8 +150,8 @@ def stream_assign_cells(
     centroids: list[list[float]],
 ) -> DataFrame:
     """Streaming IVF `add`: readStream of (vec_id, embedding) parquet,
-    nearest-frozen-centroid assignment as a stateless whole-stage-codegen
-    projection. Write with `.writeStream.partitionBy('list_id')` to grow
+    nearest-frozen-centroid assignment by assign_cells' stateless Arrow
+    kernel. Write with `.writeStream.partitionBy('list_id')` to grow
     the same partitioned-postings layout ivf_save produces."""
     stream = (
         spark.readStream.schema(EMBEDDING_STREAM_SCHEMA)
