@@ -91,3 +91,130 @@ def test_portable_hash48_matches_duckdb(spark):
         assert got[t] == want, t
         want_s = con.execute(f"select {hash48_sql('$tx', salt=7)}", {"tx": t}).fetchone()[0]
         assert got_salted[t] == want_s, t
+
+
+# The five (id, vector) encoders against dim-4 artifacts. Rows 0, 7 and
+# 8 are well formed (every value exact in float32); the rest are NULL,
+# empty, short, long, NULL-element and NaN-element vectors.
+_ENC_ROWS = [
+    (0, [0.75, 1.25, 0.125, 0.0]),
+    (1, None),
+    (2, []),
+    (3, [0.5, 0.5]),
+    (4, [1.0, 1.0, 1.0, 1.0, 1.0]),
+    (5, [1.0, None, 0.0, 0.0]),
+    (6, [float("nan"), 1.0, 0.0, 0.0]),
+    (7, [2.0, 0.0, 1.0, 1.0]),
+    (8, [1.0, 1.0, 1.5, 0.5]),
+]
+_ENC_BOOKS = [[[0.0, 0.0], [1.0, 1.0], [2.0, 0.0]], [[0.0, 0.0], [1.0, 1.0]]]
+_ENC_ROT = [[0.0, 1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0],
+            [0.0, 0.0, 0.0, 1.0], [0.0, 0.0, 1.0, 0.0]]
+_ENC_COARSE = [[0.0, 0.0, 0.0, 0.0], [1.0, 0.0, 1.0, 0.0]]
+_ENC_RQ = [
+    [[0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 0.0, 0.0], [2.0, 0.0, 1.0, 1.0]],
+    [[0.0, 0.0, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0]],
+]
+_ENC_MEAN = [0.5, 0.0, 0.0, 0.0]
+_ENC_W = [[1.0, 0.0], [0.0, 1.0], [0.0, 0.0], [0.5, 0.5]]
+
+
+def _first_min(ds):
+    return min(range(len(ds)), key=ds.__getitem__)
+
+
+def _py_pq(v, books):
+    from vector_search_test_spark.operators.pq import adc_lut
+
+    return [_first_min(row) for row in adc_lut(v, books)]
+
+
+def _py_rq(v, books):
+    codes = []
+    for book in books:
+        ds = []
+        for c in book:
+            acc = 0.0
+            for x, y in zip(v, c):
+                acc += (x - y) * (x - y)
+            ds.append(acc)
+        codes.append(_first_min(ds))
+        v = [x - y for x, y in zip(v, book[codes[-1]])]
+    return codes
+
+
+def _py_ivfpq(v):
+    from vector_search_test_spark.operators.ivf import rank_cells
+
+    cell = rank_cells(v, _ENC_COARSE, 1)[0]
+    resid = [x - c for x, c in zip(v, _ENC_COARSE[cell])]
+    return {"list_id": cell, "codes": _py_pq(resid, _ENC_BOOKS)}
+
+
+def _encoders():
+    from vector_search_test_spark.operators.pca import (
+        pca_project,
+        pca_project_py,
+    )
+    from vector_search_test_spark.operators.pq import (
+        ivfpq_encode,
+        opq_encode,
+        pq_encode,
+        rotate_queries,
+    )
+    from vector_search_test_spark.operators.rq import rq_encode
+
+    # name -> (encode df, Python twin of one well-formed row's outputs)
+    return {
+        "pq": (
+            lambda df: pq_encode(df, _ENC_BOOKS),
+            lambda v: {"codes": _py_pq(v, _ENC_BOOKS)},
+        ),
+        "opq": (
+            lambda df: opq_encode(df, _ENC_ROT, _ENC_BOOKS),
+            lambda v: {
+                "codes": _py_pq(
+                    rotate_queries([(0, v)], _ENC_ROT)[0][1], _ENC_BOOKS
+                )
+            },
+        ),
+        "ivfpq": (
+            lambda df: ivfpq_encode(df, _ENC_COARSE, _ENC_BOOKS),
+            _py_ivfpq,
+        ),
+        "rq": (
+            lambda df: rq_encode(df, _ENC_RQ),
+            lambda v: {"codes": _py_rq(v, _ENC_RQ)},
+        ),
+        "pca": (
+            lambda df: pca_project(df, _ENC_MEAN, _ENC_W),
+            lambda v: {"proj": pca_project_py(v, _ENC_MEAN, _ENC_W)},
+        ),
+    }
+
+
+@pytest.mark.parametrize("slices", [1, 16])
+@pytest.mark.parametrize("name", ["pq", "opq", "ivfpq", "rq", "pca"])
+def test_encoders_edge_matrix(spark, name, slices):
+    """Every (id, vector) encoder shares one edge rule: a NULL, empty,
+    short, long or NULL/NaN-holding vector emits no row, so it is never
+    a search result; well-formed rows match the Python twins exactly;
+    zero-row and single-row partitions (16 slices over 9 rows) and an
+    empty input pass through."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    encode, twin = _encoders()[name]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(_ENC_ROWS, slices),
+        "vec_id long, embedding array<float>",
+    )
+    got = encode(df).toPandas().sort_values("vec_id", ignore_index=True)
+    for c in ("codes", "proj"):
+        if c in got:
+            got[c] = got[c].map(list)
+    want = pd.DataFrame(
+        [{"vec_id": i, **twin(_ENC_ROWS[i][1])} for i in (0, 7, 8)]
+    )
+    assert_frame_equal(got, want, check_dtype=False, check_like=True)
+    assert encode(df.limit(0)).collect() == []

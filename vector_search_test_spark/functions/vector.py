@@ -12,6 +12,11 @@ Precision contract (shared with the DuckDB oracle): elements are stored
 float32, every arithmetic step is performed in float64 after casting each
 element, and the fold is a sequential left-to-right sum — the same order
 DuckDB's list_sum uses — so Spark and the oracle produce identical doubles.
+The numpy kernels (IVF assign/probe, PQ/OPQ/IVF-PQ/RQ encode and training,
+the wide-dim kNN scan) keep it through `_sq_dists`: one vectorized add per
+dimension, left to right — never a matmul, whose pairwise summation differs
+in the last ulp. Their Arrow boundary reads vectors through `_vector_rows`
+and, for the (id, vector) -> codes/projection encoders, `_encode_vectors`.
 """
 
 from __future__ import annotations
@@ -275,3 +280,57 @@ def l2_norm(a: Column | str) -> Column:
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity = dot(a,b) / (|a| * |b|)."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def _sq_dists(X, C):
+    """n x k float64 block of squared L2 from each row of X to each row
+    of C: the precision contract in numpy (`acc += t * t` over the
+    dimensions in order), so every entry is the double the l2_sq fold
+    and DuckDB's list_sum produce."""
+    import numpy as np
+
+    acc = np.zeros((len(X), len(C)))
+    for i in range(X.shape[1]):
+        t = X[:, i, None] - C[:, i]
+        acc += t * t
+    return acc
+
+
+def _vector_rows(vecs, dim: int):
+    """(ok, X) for a pandas Series of Arrow array values: `ok` marks the
+    rows whose distance is defined — not NULL, exactly `dim` elements,
+    no NULL or NaN element — and X holds those rows as a float64
+    matrix. The one edge rule of every vector kernel."""
+    import numpy as np
+
+    ok = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
+    )
+    X = np.array(vecs[ok].tolist(), dtype=np.float64).reshape(-1, dim)
+    finite = ~np.isnan(X).any(axis=1)
+    ok[ok] = finite
+    return ok, X[finite]
+
+
+def _encode_vectors(df, id_col: str, vec_col: str, dim: int, fields, encode):
+    """`df`'s (id_col, vec_col) rows through `encode` in one scan-only
+    Arrow kernel (`mapInPandas`): the frame every vector encoder shares.
+
+    `encode(ids, X)` maps a batch's ids (a pandas Series) and vectors
+    (float32 values widened to a float64 n x dim matrix) to a dict of
+    the output columns named by `fields`. A vector `_vector_rows`
+    rejects emits no row, so it is never a search result; a batch with
+    no valid vector emits nothing."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    def kernel(batches):
+        for pdf in batches:
+            ok, X = _vector_rows(pdf[vec_col], dim)
+            if len(X):
+                # float32 storage precision, also for an array<double> column
+                X = X.astype(np.float32).astype(np.float64)
+                yield pd.DataFrame(encode(pdf[id_col][ok], X))
+
+    return df.select(id_col, vec_col).mapInPandas(kernel, StructType(fields))

@@ -57,10 +57,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition `df` up to the cluster's parallelism — only when the
     source has fewer partitions than cores.

@@ -350,14 +350,8 @@ def dup_ngram_profile(
     be split when a boilerplate gram appears in millions of documents.
     Output is one row per document.
 
-    Tried and REVERTED (r17): an Arrow kernel fusing the gram chain
-    and the per-doc (doc, gram) count (the contamination-kernel
-    pattern) — measured SLOWER (idle-box --only min-of-6 A/B:
-    1.65 -> 1.88 s). Unlike the contamination kernel, whose output is
-    ONE row per document, this stage's output cardinality equals the
-    exploded stream's (every distinct gram string crosses back through
-    Arrow), so the Python boundary costs more than the interpreted
-    gram chain it removes (guide §4.2's volume caveat)."""
+    A/B (r17, --only min-of-6): an Arrow kernel for the gram chain and
+    (doc, gram) count, 1.65 -> 1.88 s, reverted."""
     from vector_search_test_spark.io import spread
 
     # spread: the gram explode is the compute-heavy stage and must not
@@ -503,15 +497,9 @@ def minhash_signature_table(
     method that janino rejects, silently dropping the stage to
     interpreted evaluation (~4x slower end-to-end).
 
-    Tried and REVERTED (r17): an Arrow/numpy kernel computing per-row
-    affine mins over the fingerprint arrays — measured SLOWER on the
-    real entries (idle-box --only min-of-6 A/B: neardup_decisions
-    2.40 -> 2.85, minhash_estimate_error 0.78 -> 1.12, and +0.4 on
-    corpus_e2e_curation's near-dedup stage). The exploded projection
-    is codegen'd integer multiply-adds the JVM does faster than the
-    (id, sh)-out / 17-columns-back Arrow round-trip costs; unlike cell
-    assignment (whose HOF fold ran 768M interpreted steps) there is no
-    interpreted HOF here to beat.
+    A/B (r17, --only min-of-6): an Arrow kernel for the per-row affine
+    mins, neardup_decisions 2.40 -> 2.85 s, minhash_estimate_error
+    0.78 -> 1.12 s, corpus_e2e_curation near-dedup stage +0.4 s, reverted.
     """
     from vector_search_test_spark.functions.hashing import minhash_member
 

@@ -559,9 +559,9 @@ def pq_recon_err_staged(
 ) -> "tuple[DataFrame, Column]":
     """Spark-side BOUND-COLUMN form of `pq_recon_err_expr` — identical
     doubles, codegen-splittable, and COMPILED arithmetic end to end
-    (the r16 optimization of the HOF-fold form below, which compiled
-    but executed every one of its m*ksub folds interpreted —
-    CodegenFallback by design — and measured ~1.8x the r15 baseline).
+    (r16: a HOF-fold form compiled but executed every one of its m*ksub
+    folds interpreted — CodegenFallback by design — and measured ~1.8x
+    the r15 baseline).
     Three-level staging, the pca_recon_err_staged recipe at PQ shape:
 
     1. a producer select binds each subspace SLICE to `__ps{s}`
@@ -618,68 +618,6 @@ def pq_recon_err_staged(
             for s, cents in enumerate(books)
         )
     )
-    return staged, err
-
-
-def pq_recon_err_hof(
-    df: DataFrame, vec: str, books: "list[list[list[float]]]"
-) -> "tuple[DataFrame, Column]":
-    """Spark-side HOF-fold form of `pq_recon_err_expr` — identical
-    doubles, compiles under whole-stage codegen. The single-string
-    form renders m*ksub*dsub*2 multiply-adds (8*16*8*2 = 2048 at the
-    entry's shapes) into ONE expression — ~20x over the repo's own
-    UNROLL_MAX_TERMS=96 compiled-unroll envelope (vector.py) — and a
-    single expression cannot be split across generated methods, so
-    the doConsume blows janino's 64 KB limit and the whole scan
-    silently runs interpreted (VERDICT r15 #1 — BENCH_r15's stderr
-    trace). Bound-column staging was tried and sweep-rejected: a
-    whole-stage doConsume only splits into its own method when every
-    child output is consumed more than once AND fits the JVM's
-    255-parameter-slot limit, and 2048 terms cannot be staged inside
-    those constraints without pinning every passthrough. So this is
-    the repo's documented over-envelope path (l2_sq's HOF form): per
-    subspace, zip_with the vector slice against each centroid literal
-    and left-fold from 0.0 — `0.0 + t == t` and the fold pairs terms
-    exactly like the ' + '.join chain, so every double matches the
-    single-string form the DuckDB twin replays (the l2_sq pairing
-    precedent); `least()` over the per-centroid folds is the subspace
-    residual, summed left-associatively across subspaces. HOFs are
-    CodegenFallback BY DESIGN — the compiled stage calls them
-    interpreted, nothing else falls back. At 100 TB a pipeline would
-    precompute PQ codes once (the ivfpq path) rather than re-derive
-    residuals per scan; this is a 4-row diagnostic report.
-
-    The subspace SLICES bind to their own columns in a producer
-    select (each referenced 2*ksub times by its chains, so
-    CollapseProject keeps the producer): an inline slice re-evaluates
-    once PER CHAIN in the interpreted path — ksub extra array copies
-    per subspace per row for the same doubles. Returns
-    (staged_df, err_column)."""
-    slice_cols = []
-    lo = 0
-    for s, cents in enumerate(books):
-        dsub = len(cents[0])
-        slice_cols.append(
-            F.slice(F.col(vec), lo + 1, dsub).alias(f"__ps{s}")
-        )
-        lo += dsub
-    staged = df.select("*", *slice_cols)
-    err: Column | None = None
-    for s, cents in enumerate(books):
-        sl = F.col(f"__ps{s}")
-        dists = []
-        for c in cents:
-            carr = F.array(*[F.lit(float(x)) for x in c])
-            sq = F.zip_with(
-                sl,
-                carr,
-                lambda x, cc: (x.cast("double") - cc)
-                * (x.cast("double") - cc),
-            )
-            dists.append(F.aggregate(sq, F.lit(0.0), lambda a, t: a + t))
-        sub = F.least(*dists)
-        err = sub if err is None else err + sub
-    assert err is not None
     return staged, err
 
 
@@ -808,9 +746,9 @@ def quantization_error_report(
     # NOT the single-string exprs the oracle replays — identical
     # doubles via staged bound columns (both legs), instead of one
     # >64 KB doConsume that silently runs interpreted (VERDICT r15 #1)
-    # or the HOF-fold form whose m*ksub folds per row execute
-    # interpreted by design (the r16 tripwire regression) — see
-    # pq_recon_err_staged / pca_recon_err_staged
+    # or a HOF fold whose m*ksub folds per row execute interpreted by
+    # design (the r16 tripwire regression) — see pq_recon_err_staged /
+    # pca_recon_err_staged
     pq_staged, pq_err = pq_recon_err_staged(base, vec_col, pq_books)
     pq_row = agg(pq_staged, pq_err, "pq", m)
 

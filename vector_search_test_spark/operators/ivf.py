@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
+    _sq_dists,
+    _vector_rows,
     const_float_array,
     l2_sq,
     l2_sq_const,
@@ -420,47 +422,35 @@ def _map_cells(
     centroid, in one Arrow-batched numpy kernel (`mapInPandas`) — the
     shared core of assign_cells and probe_cells.
 
-    `pick` maps a rows x nlist float64 distance block to a list of one
-    value per row. Distances accumulate per DIMENSION left-to-right in float64
-    over exactly widened float32 elements (centroids are rounded to
-    float32 first, as the stored centroid table holds them): the l2_sq
-    fold's summation order and `rank_cells`' arithmetic, NOT a matmul,
-    whose pairwise summation differs in the last ulp. The matrix ships
-    as a SparkContext broadcast (fetched once per worker; at nlist ~ 1e5
-    x dim 64 it is ~50 MB, too big for a task closure), so the plan
+    `pick` maps a rows x nlist distance block (`_sq_dists`, the numpy
+    form of the precision contract in functions/vector.py; centroids
+    are rounded to float32 first, as the stored centroid table holds
+    them) to a list of one value per row. The matrix ships as a
+    SparkContext broadcast (fetched once per worker; at nlist ~ 1e5 x
+    dim 64 it is ~50 MB, too big for a task closure), so the plan
     carries no centroid literal and no join.
 
-    A row whose distance is undefined — NULL vector, length != dim, or
-    a NULL/NaN element — gets `out_col` NULL."""
+    A row whose distance is undefined (`_vector_rows`: NULL vector,
+    length != dim, or a NULL/NaN element) keeps its place with
+    `out_col` NULL."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
     C = np.array(centroids, dtype=np.float32).astype(np.float64)
     nlist, dim = C.shape
-    bc = df.sparkSession.sparkContext.broadcast(np.ascontiguousarray(C.T))
+    # column-major: each dimension's column `_sq_dists` reads is contiguous
+    bc = df.sparkSession.sparkContext.broadcast(np.asfortranarray(C))
     step = max(1, _KERNEL_CELLS // nlist)
     schema = StructType(df.schema.fields + [StructField(out_col, out_type)])
 
     def kernel(batches):
-        ct = bc.value
+        C = bc.value
         for pdf in batches:
-            vecs = pdf[vec_col]
-            ok = np.fromiter(
-                (v is not None and len(v) == dim for v in vecs), bool, len(pdf)
-            )
-            X = np.array(vecs[ok].tolist(), dtype=np.float64).reshape(-1, dim)
-            finite = ~np.isnan(X).any(axis=1)
-            ok[ok] = finite
-            X = X[finite]
+            ok, X = _vector_rows(pdf[vec_col], dim)
             vals = []
             for s in range(0, max(len(X), 1), step):
-                xs = X[s : s + step]
-                acc = np.zeros((len(xs), nlist))
-                for i in range(dim):
-                    t = xs[:, i, None] - ct[i]
-                    acc += t * t
-                vals += pick(acc)
+                vals += pick(_sq_dists(X[s : s + step], C))
             out = [None] * len(pdf)
             for j, v in zip(np.flatnonzero(ok), vals):
                 out[j] = v

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
+    _sq_dists,
     const_float_array,
     cosine_sim,
     l2_sq,
@@ -381,9 +382,8 @@ def knn_exact_arrow(
     knn_exact).
 
     Bit-identical doubles to knn_exact / the DuckDB oracle: distances
-    accumulate per-DIMENSION left-to-right in float64 — the same
-    summation order as the l2_sq fold — NOT via matmul (whose pairwise
-    summation differs in the last ulp).
+    come from `_sq_dists`, the numpy form of the precision contract in
+    functions/vector.py.
 
     The query side is collected to the driver and shipped in the task
     closure (same smallness contract as knn_exact's query broadcast).
@@ -397,7 +397,6 @@ def knn_exact_arrow(
         return knn_exact(queries, corpus, k=k)
     qids = np.array([r[0] for r in rows], dtype=np.int64)
     qmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    nq, dim = qmat.shape
     kk = k
 
     def score(batches):
@@ -408,12 +407,7 @@ def knn_exact_arrow(
                 continue
             vids = pdf[id_col].to_numpy(dtype=np.int64)
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            # per-dimension left-to-right accumulation: bit-identical to
-            # the sequential fold (all doubles, one addend per step)
-            acc = np.zeros((nq, X.shape[0]), dtype=np.float64)
-            for i in range(dim):
-                t = qmat[:, i, None] - X[None, :, i]
-                acc += t * t
+            acc = _sq_dists(qmat, X)
             take = min(kk, X.shape[0])
             # exact (dist, vec_id) lexicographic top-k per query: the
             # global merge is correct iff every potential winner survives

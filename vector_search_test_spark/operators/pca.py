@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from vector_search_test_spark.functions.vector import _encode_vectors
+
 
 def train_pca_numpy(X, out_dim: int):
     """Driver-side exact PCA on a bounded sample: mean-center, eigh of
@@ -62,39 +64,27 @@ def pca_project(
     vec_col: str = "embedding",
     out_col: str = "proj",
 ) -> DataFrame:
-    """Scan-only Arrow projection y = (x - mean) @ W, accumulated per
-    input dimension left-to-right (the SQL-twin order). Output:
-    (id_col, out_col: array<double>[out_dim])."""
+    """Scan-only Arrow projection y = (x - mean) @ W (`_encode_vectors`),
+    accumulated per input dimension left-to-right (the SQL-twin order).
+    Output: (id_col, out_col: array<double>[out_dim]); a NULL,
+    wrong-length or NaN-holding vector emits no row."""
     import numpy as np
 
     Wm = np.array(W, dtype=np.float64)
     mv = np.array(mean, dtype=np.float64)
-    dim, out_dim = Wm.shape
+    dim = Wm.shape[0]
+    fields = [
+        df.schema[id_col],
+        T.StructField(out_col, T.ArrayType(T.DoubleType(), False), False),
+    ]
 
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField(
-                out_col, T.ArrayType(T.DoubleType(), False), False
-            ),
-        ]
-    )
+    def project(ids, X):
+        Y = np.zeros((len(X), Wm.shape[1]), dtype=np.float64)
+        for j in range(dim):  # left-to-right over input dims
+            Y += (X[:, j : j + 1] - mv[j]) * Wm[j, :][None, :]
+        return {id_col: ids, out_col: list(Y)}
 
-    def project(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float32).astype(
-                np.float64
-            )
-            Y = np.zeros((len(pdf), out_dim), dtype=np.float64)
-            for j in range(dim):  # left-to-right over input dims
-                Y += (X[:, j : j + 1] - mv[j]) * Wm[j, :][None, :]
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: list(Y)})
-
-    return df.select(id_col, vec_col).mapInPandas(project, schema)
+    return _encode_vectors(df, id_col, vec_col, dim, fields, project)
 
 
 def pca_project_py(vec, mean, W):

@@ -19,7 +19,8 @@ Spark-first shapes:
   (KBs), a broadcast-sized artifact.
 - ENCODE (`pq_encode`): scan-only mapInPandas — each Arrow batch is
   scored against every codebook with vectorized numpy and emits
-  (id, codes array<int>). No shuffle at any corpus size.
+  (id, codes array<int>); a NULL, wrong-length or NaN-holding vector
+  emits no row. No shuffle at any corpus size.
 - SEARCH (`pq_adc_topk_all`): asymmetric distance computation (ADC,
   Jegou et al., "Product Quantization for Nearest Neighbor Search",
   TPAMI 2011): per query, a tiny m x ksub lookup table of exact
@@ -32,14 +33,12 @@ Spark-first shapes:
   distances for the ADC top-R only — a broadcast-able R-row join back
   to the float table, never a full scan.
 
-Precision contract (shared with the DuckDB oracle, like
-functions/vector.py): float32 storage, float64 arithmetic, and every
-distance accumulates per-dimension LEFT-TO-RIGHT — numpy encode loops
-over dimensions with vectorized adds (bit-identical to the scalar
-chain), LUT entries accumulate sequentially in Python floats, and the
-ADC sum folds lookups left-to-right (F.aggregate / DuckDB list_sum) —
-so Spark, numpy, and the oracle produce identical doubles, and argmin
-tie-breaks (first minimum) agree everywhere.
+Precision contract: the one in functions/vector.py — encode and
+training score through its numpy form `_sq_dists`, LUT entries
+accumulate sequentially in Python floats, and the ADC sum folds lookups
+left-to-right (F.aggregate / DuckDB list_sum) — so Spark, numpy, and
+the oracle produce identical doubles, and argmin tie-breaks (first
+minimum) agree everywhere.
 """
 
 from __future__ import annotations
@@ -48,6 +47,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vector_search_test_spark.functions.vector import (
+    _encode_vectors,
+    _sq_dists,
+)
 from vector_search_test_spark.operators.ivf import (
     DEFAULT_SEED,
     _lloyd_numpy,
@@ -90,6 +93,19 @@ def train_pq_numpy(
     ]
 
 
+def _pq_codes(X, cents):
+    """(n, m) int32 PQ codes of the rows of X: per subspace j, the first
+    nearest entry of cents[j] (a ksub x dsub float64 codebook)."""
+    import numpy as np
+
+    dsub = cents[0].shape[1]
+    codes = np.empty((len(X), len(cents)), dtype=np.int32)
+    for j, C in enumerate(cents):
+        sub = X[:, j * dsub : (j + 1) * dsub]
+        codes[:, j] = _sq_dists(sub, C).argmin(axis=1)
+    return codes
+
+
 def pq_encode(
     df: DataFrame,
     books,
@@ -98,49 +114,23 @@ def pq_encode(
 ) -> DataFrame:
     """Encode every vector to its PQ codes: (id_col, codes array<int>).
 
-    Scan-only mapInPandas: each Arrow batch is scored against each
-    subspace's codebook with vectorized numpy — distances accumulate
-    per-dimension left-to-right (NOT matmul) so the doubles match the
-    scalar chain the DuckDB twin evaluates, and np.argmin's first-min
-    tie-break matches list_position(list_min). No shuffle, no state;
+    Scan-only mapInPandas (`_encode_vectors`): each Arrow batch is
+    scored against each subspace's codebook by `_sq_dists`, so the
+    doubles match the scalar chain the DuckDB twin evaluates, and
+    np.argmin's first-min tie-break matches list_position(list_min). A
+    vector with no defined distance emits no row. No shuffle, no state;
     at 100 TB this is a pure map over the column batches."""
     import numpy as np
 
-    m = len(books)
-    dsub = len(books[0][0])
-    cents = [
-        np.array(book, dtype=np.float64) for book in books
-    ]  # [m] x (ksub, dsub)
-
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
-        ]
+    cents = [np.array(book, dtype=np.float64) for book in books]
+    fields = [
+        df.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
+    ]
+    return _encode_vectors(
+        df, id_col, vec_col, len(books) * len(books[0][0]), fields,
+        lambda ids, X: {id_col: ids, "codes": list(_pq_codes(X, cents))},
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            X = Xf.astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = X[:, j * dsub : (j + 1) * dsub]
-                C = cents[j]  # (ksub, dsub)
-                d = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-                for i in range(dsub):  # per-dimension, left-to-right
-                    t = sub[:, i : i + 1] - C[None, :, i]
-                    d += t * t
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
 def adc_lut(query, books):
@@ -273,8 +263,8 @@ def train_ivfpq_numpy(
     (x - coarse_centroid) — residuals concentrate around zero, so the
     same code budget quantizes them much more accurately than raw
     vectors. Returns (coarse, books), both float32-rounded. Training
-    assignment accumulates per-dimension left-to-right like the
-    engines, so the trainer is deterministic end to end."""
+    assignment scores through `_sq_dists` like the engines, so the
+    trainer is deterministic end to end."""
     import numpy as np
 
     coarse = [
@@ -282,11 +272,7 @@ def train_ivfpq_numpy(
         for c in _lloyd_numpy(X, min(nlist, X.shape[0]), seed, max_iter=max_iter)
     ]
     C = np.array(coarse, dtype=np.float64)
-    d = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-    for i in range(X.shape[1]):
-        t = X[:, i : i + 1] - C[None, :, i]
-        d += t * t
-    resid = X - C[np.argmin(d, axis=1)]
+    resid = X - C[_sq_dists(X, C).argmin(axis=1)]
     books = train_pq_numpy(resid, m=m, ksub=ksub, seed=seed + 1000, max_iter=max_iter)
     return coarse, books
 
@@ -299,60 +285,31 @@ def ivfpq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode to IVF-PQ postings: (list_id, id, codes). Scan-only
-    mapInPandas: coarse argmin (per-dimension left-to-right, first-min
-    ties), residual against the winning centroid, PQ codes of the
-    residual — each step bit-matching the SQL twin's arithmetic. At
-    scale the output persists partitionBy('list_id') exactly like the
-    float postings (operators/ivf.py::ivf_save), but m bytes per vector
+    mapInPandas (`_encode_vectors`): coarse argmin over `_sq_dists`
+    (first-min ties), residual against the winning centroid, PQ codes
+    of the residual — each step bit-matching the SQL twin's arithmetic.
+    A vector with no defined distance gets no posting. At scale the
+    output persists partitionBy('list_id') exactly like the float
+    postings (operators/ivf.py::ivf_save), but m bytes per vector
     instead of dim*4."""
     import numpy as np
 
-    m = len(books)
-    dsub = len(books[0][0])
     C = np.array(coarse, dtype=np.float64)
     cents = [np.array(b, dtype=np.float64) for b in books]
+    fields = [
+        T.StructField("list_id", T.IntegerType(), False),
+        df.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
+    ]
 
-    schema = T.StructType(
-        [
-            T.StructField("list_id", T.IntegerType(), False),
-            df.schema[id_col],
-            T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
-        ]
-    )
+    def encode(ids, X):
+        cell = _sq_dists(X, C).argmin(axis=1)
+        codes = _pq_codes(X - C[cell], cents)
+        return {
+            "list_id": cell.astype(np.int32), id_col: ids, "codes": list(codes)
+        }
 
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float32).astype(
-                np.float64
-            )
-            d = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-            for i in range(X.shape[1]):
-                t = X[:, i : i + 1] - C[None, :, i]
-                d += t * t
-            cell = np.argmin(d, axis=1)
-            R = X - C[cell]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = R[:, j * dsub : (j + 1) * dsub]
-                Cd = cents[j]
-                dj = np.zeros((len(pdf), Cd.shape[0]), dtype=np.float64)
-                for i in range(dsub):
-                    t = sub[:, i : i + 1] - Cd[None, :, i]
-                    dj += t * t
-                codes[:, j] = np.argmin(dj, axis=1)
-            yield pd.DataFrame(
-                {
-                    "list_id": cell.astype(np.int32),
-                    id_col: pdf[id_col],
-                    "codes": list(codes),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return _encode_vectors(df, id_col, vec_col, C.shape[1], fields, encode)
 
 
 def ivfpq_luts(queries, coarse, books, nprobe: int):
@@ -461,6 +418,7 @@ def train_opq_numpy(
         for j in range(m):
             sub = Y[:, j * dsub : (j + 1) * dsub]
             C = cents[j]
+            # .sum(axis=2), not _sq_dists: it picks the OPQ iterate
             d = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             out[:, j * dsub : (j + 1) * dsub] = C[np.argmin(d, axis=1)]
         return out
@@ -505,51 +463,30 @@ def opq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Rotate + PQ-encode in ONE scan-only mapInPandas pass: the
-    broadcast-sized rotation matrix rides the task closure, the rotation
-    accumulates per INPUT dimension left-to-right (bit-identical to the
-    scalar chain / list_sum the oracle evaluates), and the code
-    assignment is `pq_encode`'s per-dimension loop on the rotated
-    floats. Same (id, codes) contract and 100 TB shape as pq_encode —
-    no shuffle, m bytes per vector out."""
+    """Rotate + PQ-encode in ONE scan-only mapInPandas pass
+    (`_encode_vectors`): the broadcast-sized rotation matrix rides the
+    task closure, the rotation accumulates per INPUT dimension
+    left-to-right (bit-identical to the scalar chain / list_sum the
+    oracle evaluates), and the codes are `pq_encode`'s `_pq_codes` on
+    the rotated floats. Same (id, codes) contract, edge rule and 100 TB
+    shape as pq_encode — no shuffle, m bytes per vector out."""
     import numpy as np
 
-    m = len(books)
-    dsub = len(books[0][0])
     cents = [np.array(book, dtype=np.float64) for book in books]
     Rm = np.array(R, dtype=np.float64)
     dim = Rm.shape[0]
+    fields = [
+        df.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
+    ]
 
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
-        ]
-    )
+    def encode(ids, X):
+        Y = np.zeros_like(X)
+        for j in range(dim):  # left-to-right over input dims
+            Y += X[:, j : j + 1] * Rm[j, :][None, :]
+        return {id_col: ids, "codes": list(_pq_codes(Y, cents))}
 
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            X = Xf.astype(np.float64)
-            Y = np.zeros_like(X)
-            for j in range(dim):  # left-to-right over input dims
-                Y += X[:, j : j + 1] * Rm[j, :][None, :]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                sub = Y[:, j * dsub : (j + 1) * dsub]
-                C = cents[j]
-                d = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-                for i in range(dsub):
-                    t = sub[:, i : i + 1] - C[None, :, i]
-                    d += t * t
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
-
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return _encode_vectors(df, id_col, vec_col, dim, fields, encode)
 
 
 def rotate_sql(vec_expr: str, R) -> str:

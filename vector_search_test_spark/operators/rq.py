@@ -22,12 +22,12 @@ Spark shape (100 TB):
   (the shared _lloyd_numpy kernel; bounded subsample like IVF/PQ
   train).
 - encode: ONE scan-side Arrow mapInPandas over the vector column — the
-  pq_encode pattern: per-dimension left-to-right float64 accumulation
-  (never matmul) and np.argmin's first-min tie-break, so the doubles
-  and the chosen codes match the scalar chains the DuckDB twin
-  evaluates exactly. Residual subtraction stays in float64 on
-  float32-rounded codebooks — the same values the twin's literals
-  carry. No shuffle.
+  pq_encode frame (`_encode_vectors`): distances by `_sq_dists`, the
+  numpy form of the precision contract in functions/vector.py, and
+  np.argmin's first-min tie-break, so the doubles and the chosen codes
+  match the scalar chains the DuckDB twin evaluates exactly. Residual
+  subtraction stays in float64 on float32-rounded codebooks — the same
+  values the twin's literals carry. No shuffle.
 - search: asymmetric distance via a driver-computed LUT of
   ||q - C1[a] - C2[b]||^2 over all K^levels code combinations (the
   adc_lut literal-parity pattern — both engines read the SAME
@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.vector import _encode_vectors, _sq_dists
 from .ivf import DEFAULT_SEED, _lloyd_numpy
 
 
@@ -68,12 +69,8 @@ def train_rq_numpy(
         book = [[float(np.float32(x)) for x in c] for c in cents]
         books.append(book)
         C = np.array(book, dtype=np.float64)
-        # assign with the SAME per-dimension accumulation encode uses
-        d = np.zeros((R.shape[0], C.shape[0]), dtype=np.float64)
-        for i in range(R.shape[1]):
-            t = R[:, i : i + 1] - C[None, :, i]
-            d += t * t
-        R = R - C[np.argmin(d, axis=1)]
+        # assign with the SAME distance block encode uses
+        R = R - C[_sq_dists(R, C).argmin(axis=1)]
     return books
 
 
@@ -85,45 +82,30 @@ def rq_encode(
 ) -> DataFrame:
     """Encode every vector to its RQ codes: (id_col, codes array<int>,
     one 0-based code per level). Scan-only Arrow mapInPandas — the
-    pq_encode kernel generalized to sequential levels: per level,
-    per-dimension left-to-right distance accumulation over the FULL
-    dimensionality, np.argmin (first-min), then the float64 residual
-    against the float32-rounded centroid. No shuffle, no state."""
+    pq_encode frame (`_encode_vectors`) over sequential levels: per
+    level, `_sq_dists` over the FULL dimensionality, np.argmin
+    (first-min), then the float64 residual against the float32-rounded
+    centroid. A vector with no defined distance emits no row. No
+    shuffle, no state."""
     import numpy as np
 
     cents = [np.array(b, dtype=np.float64) for b in books]
-    levels = len(cents)
+    fields = [
+        df.schema[id_col],
+        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
+    ]
 
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("codes", T.ArrayType(T.IntegerType(), False), False),
-        ]
+    def encode(ids, R):
+        codes = np.empty((len(R), len(cents)), dtype=np.int32)
+        for l, C in enumerate(cents):
+            idx = _sq_dists(R, C).argmin(axis=1)
+            codes[:, l] = idx
+            R = R - C[idx]
+        return {id_col: ids, "codes": list(codes)}
+
+    return _encode_vectors(
+        df, id_col, vec_col, cents[0].shape[1], fields, encode
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            R = Xf.astype(np.float64)
-            codes = np.empty((len(pdf), levels), dtype=np.int32)
-            for l in range(levels):
-                C = cents[l]
-                d = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-                for i in range(R.shape[1]):  # per-dimension, in order
-                    t = R[:, i : i + 1] - C[None, :, i]
-                    d += t * t
-                idx = np.argmin(d, axis=1)
-                codes[:, l] = idx
-                R = R - C[idx]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
 def rq_lut(query, books):

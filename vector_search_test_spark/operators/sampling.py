@@ -658,13 +658,8 @@ def _contamination_counts_kernel(
                 {"id": pdf["id"], "n_shingles": ns_out, "n_hits": nh_out}
             )
 
-    # deliberately NO io.spread here (measured r17): the kernel's set
-    # arithmetic is cheap enough that repartitioning the full text
-    # column costs more than the parallelism buys at bench scale, in
-    # BOTH measured shapes (raw 1-file scan: 0.77 -> 0.63 s; inside the
-    # curation pipeline's joined survivor frame: decontam stage
-    # 1.13 -> 0.84 s). At real scale the input has >= cores partitions
-    # and spread would be a no-op anyway.
+    # A/B (r17): dropping io.spread here, raw scan 0.77 -> 0.63 s,
+    # curation decontam stage 1.13 -> 0.84 s.
     base = docs.select(F.col(id_col).alias("id"), F.col(text_col)).select(
         "id", tokens(text_col).alias("__toks")
     )
@@ -897,12 +892,7 @@ def dsir_select(
             int(score_decimals),
         ),
     )
-    # NO eager checkpoint of `scored` here (tried r17: 2.36 -> 3.28 s):
-    # the log-weight scoring ends in an (id)-keyed aggregate, so
-    # ReuseExchange already dedups the scoring subtree across the
-    # histogram-plan consumers in-plan — the checkpoint only added a
-    # materialization job (the r16 bigram lesson). Contrast the topp
-    # entries, whose scan-projection scores have no exchange to reuse.
+    # A/B (r17): an eager checkpoint of `scored`, 2.36 -> 3.28 s, reverted.
     return top_fraction_by_score(scored, "score", frac, id_col=id_col)
 
 

@@ -96,11 +96,6 @@ def _events_ts_flavor(input_dir: str) -> str:
     return "ltz" if t.tz else "ntz"
 
 
-def _events_ts_is_nanos(input_dir: str) -> bool:
-    """Back-compat shim: True only for physical-INT64 TIMESTAMP(NANOS)."""
-    return _events_ts_flavor(input_dir) == "int64_nanos"
-
-
 def events_stream_reader(
     spark: SparkSession,
     input_dir: str,
