@@ -200,6 +200,39 @@ def test_ivf_append_grows_saved_index(spark, sf_dir, tmp_path):
     assert cells <= set(range(4))
 
 
+def test_ivf_append_adds_bounded_files_per_list(spark, sf_dir, tmp_path):
+    """An append goes through the postings sink's shuffle: each list_id=
+    directory gains at most max(1, cores // nlist) files, however many
+    partitions the appended frame has (unshuffled, each partition wrote
+    one file into every list it touched)."""
+    from vector_search_test_spark.operators.ivf import (
+        ivf_append,
+        ivf_build,
+        ivf_save,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = ivf_build(emb.filter(F.col("vec_id") % 2 == 0), nlist=4)
+    path = tmp_path / "idx"
+    ivf_save(idx, str(path))
+
+    def files():
+        return {
+            d.name: len(list(d.glob("*.parquet")))
+            for d in (path / "postings").glob("list_id=*")
+        }
+
+    before = files()
+    par = spark.sparkContext.defaultParallelism
+    added = emb.filter(F.col("vec_id") % 2 == 1).repartition(2 * par)
+    ivf_append(idx, str(path), added)
+    after = files()
+    assert set(after) == set(before)
+    gained = {d: after[d] - before[d] for d in after}
+    assert sum(gained.values()) > 0
+    assert max(gained.values()) <= max(1, par // 4), gained
+
+
 def test_train_survives_fewer_distinct_vectors_than_k(spark):
     """Duplicate-heavy corpora: MLlib's k-means|| crashes when distinct
     vectors < k; train_centroids must clamp and return the distinct

@@ -218,3 +218,54 @@ def test_encoders_edge_matrix(spark, name, slices):
     )
     assert_frame_equal(got, want, check_dtype=False, check_like=True)
     assert encode(df.limit(0)).collect() == []
+
+
+@pytest.mark.parametrize("slices", [1, 16])
+def test_knn_exact_arrow_edge_matrix(spark, slices):
+    """`knn_exact_arrow` applies the same edge rule on both sides: an
+    invalid corpus vector is never a result and an invalid query (NULL,
+    short, NULL/NaN-holding) returns no rows; well-formed pairs get the
+    sequential-sum distance and the (dist, vec_id) top-k."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from vector_search_test_spark.operators.knn import knn_exact_arrow
+
+    corpus = spark.createDataFrame(
+        spark.sparkContext.parallelize(_ENC_ROWS, slices),
+        "vec_id long, embedding array<float>",
+    )
+    qrows = [
+        (100, [1.0, 0.5, 0.0, 2.0]),
+        (101, None),
+        (102, [1.0, 1.0]),
+        (103, [1.0, float("nan"), 0.0, 0.0]),
+        (104, [0.0, 0.0, 0.0, 0.0]),
+        (105, [None, 1.0, 0.0, 0.0]),
+    ]
+    queries = spark.createDataFrame(qrows, "query_id long, query_vec array<float>")
+    k = 2
+    got = (
+        knn_exact_arrow(queries, corpus, k=k)
+        .toPandas()
+        .sort_values(["query_id", "dist", "vec_id"], ignore_index=True)
+    )
+
+    def dist(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += (x - y) * (x - y)
+        return acc
+
+    want = pd.DataFrame(
+        [
+            {"query_id": q, "vec_id": i, "dist": d}
+            for q, qv in (qrows[0], qrows[4])
+            for d, i in sorted((dist(qv, _ENC_ROWS[i][1]), i) for i in (0, 7, 8))[:k]
+        ]
+    )
+    assert_frame_equal(got, want, check_dtype=False)
+    assert knn_exact_arrow(queries, corpus.limit(0), k=k).collect() == []
+    for invalid in ("101", "101, 102, 103, 105"):
+        only = queries.filter(f"query_id IN ({invalid})")
+        assert knn_exact_arrow(only, corpus, k=k).collect() == []

@@ -602,11 +602,13 @@ def ivf_append(index: IvfIndex, path: str, df: DataFrame,
     """Append new vectors to a SAVED index: assign against the frozen
     centroids and append into the partitioned postings layout (new files
     land inside the matching list_id= directories; readers pick them up
-    with no compaction step)."""
+    with no compaction step). The rows take the sink's shuffle on
+    list_id (`_by_list`), so an append adds at most max(1, cores //
+    nlist) files per list, not one per input partition and list."""
     new_posts = _postings(df, index.centroids, id_col, vec_col)
-    new_posts.write.mode("append").partitionBy("list_id").parquet(
-        os.path.join(path, "postings")
-    )
+    _by_list(new_posts, index.nlist).write.mode("append").partitionBy(
+        "list_id"
+    ).parquet(os.path.join(path, "postings"))
 
 
 def rank_cells(
@@ -925,27 +927,29 @@ def write_partitioned_postings(
     DIFFERENT partitions, losing or duplicating written postings
     (ADVICE r12). Identical rows hash to the same salt, which only
     co-locates exact duplicates — harmless for spread, safe on retry."""
-    spark = postings.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    _by_list(postings, nlist).write.mode("overwrite").partitionBy(
+        "list_id"
+    ).parquet(path)
+
+
+def _by_list(postings: DataFrame, nlist: int | None) -> DataFrame:
+    """`postings` shuffled on list_id, salted when nlist < cores: the
+    layout rule of `write_partitioned_postings`, which `ivf_append` shares
+    so an append adds at most max(1, cores // nlist) files per list."""
+    par = postings.sparkSession.sparkContext.defaultParallelism
     salt_w = max(1, par // max(1, int(nlist))) if nlist else 1
-    if salt_w > 1:
-        salt_src = (
-            F.hash("vec_id")
-            if "vec_id" in postings.columns
-            else F.hash(*postings.columns)
-        )
-        (
-            postings.withColumn("__salt", F.pmod(salt_src, F.lit(salt_w)))
-            .repartition(par, "list_id", "__salt")
-            .drop("__salt")
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(path)
-        )
-    else:
-        postings.repartition(par, "list_id").write.mode(
-            "overwrite"
-        ).partitionBy("list_id").parquet(path)
+    if salt_w == 1:
+        return postings.repartition(par, "list_id")
+    salt_src = (
+        F.hash("vec_id")
+        if "vec_id" in postings.columns
+        else F.hash(*postings.columns)
+    )
+    return (
+        postings.withColumn("__salt", F.pmod(salt_src, F.lit(salt_w)))
+        .repartition(par, "list_id", "__salt")
+        .drop("__salt")
+    )
 
 
 def write_centroid_table(spark, centroids, path: str) -> None:

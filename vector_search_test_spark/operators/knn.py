@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
     _sq_dists,
+    _vector_rows,
     const_float_array,
     cosine_sim,
     l2_sq,
@@ -387,26 +388,33 @@ def knn_exact_arrow(
 
     The query side is collected to the driver and shipped in the task
     closure (same smallness contract as knn_exact's query broadcast).
+
+    Edge rule (`_vector_rows`, against the width most query vectors
+    share): an invalid corpus vector is never a result, and an invalid
+    query returns no rows.
     """
+    from collections import Counter
+
     import numpy as np
+    import pandas as pd
 
     rows = queries.select(
         F.col(query_id_col), F.col(query_vec_col)
     ).collect()
-    if not rows:
-        return knn_exact(queries, corpus, k=k)
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    qmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    widths = Counter(len(r[1]) for r in rows if r[1] is not None)
+    if not widths:
+        return knn_exact(queries.limit(0), corpus, k=k)
+    dim = max(widths, key=lambda n: (widths[n], n))
+    ok, qmat = _vector_rows(pd.Series([r[1] for r in rows], dtype=object), dim)
+    qids = np.array([r[0] for r in rows], dtype=np.int64)[ok]
     kk = k
 
     def score(batches):
-        import pandas as pd
-
         for pdf in batches:
-            if pdf.empty:
+            valid, X = _vector_rows(pdf[vec_col], dim)
+            if not len(X):
                 continue
-            vids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vids = pdf[id_col].to_numpy(dtype=np.int64)[valid]
             acc = _sq_dists(qmat, X)
             take = min(kk, X.shape[0])
             # exact (dist, vec_id) lexicographic top-k per query: the

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_session(
     app_name: str = "vector-search-test-spark",
@@ -26,6 +28,13 @@ def get_session(
     - shuffle partitions default 32 to match local[32]; a real cluster would
       set this to ~2-3x total cores (or rely on AQE coalescing from a high
       initial value).
+    - Python workers run the `vector_search_test_spark.worker` daemon:
+      PySpark's worker invalidates the import caches on every task, which
+      made each task re-read the whole directory of pyspark.zip, the py4j
+      zip and the spark-core jar (0.1-0.4 s a task against a kernel of a
+      few ms); the daemon re-reads an archive only when it changed. The
+      package's parent directory goes on the workers' PYTHONPATH, so the
+      daemon and every package kernel import from any working directory.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
@@ -48,6 +57,8 @@ def get_session(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "vector_search_test_spark.worker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
