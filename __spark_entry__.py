@@ -2408,13 +2408,13 @@ def _q_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Clustering config shared by the Spark queries and the DuckDB oracle.
 # theta=1.2 gives a non-degenerate partition on the fixtures (multi-member
-# clusters AND singletons); nprobe=nlist makes the kNN graph exact so the
-# trained centroids cannot affect the result (SURVEY §2.9 Q3).
+# clusters AND singletons); full probe (nprobe left None) makes the kNN
+# graph exact, with no centroids trained at all (SURVEY §2.9 Q3).
 _CLUSTER_THETA = 1.2
 _CLUSTER_K = 10
 
 # The three cluster entries share one pipeline result per (session, sf):
-# re-running KMeans + kNN + iterative CC three times would triple the cost
+# re-running the self-kNN graph + CC three times would triple the cost
 # for identical output. localCheckpoint pins the result for the process.
 _CLUSTER_MEMO: dict = {}
 
@@ -2456,18 +2456,10 @@ def _cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the same composition as operators/cluster.py::similarity_clusters
         # (which tests certify), split so the graph memo is shared with
         # pagerank_similarity
-        from vector_search_test_spark.operators.cluster import (
-            connected_components,
-            number_clusters,
-        )
+        from vector_search_test_spark.operators.cluster import label_clusters
 
         deduped, edges = _similarity_graph_parts(spark, sf_dir)
-        nodes = deduped.select(F.col("id"))
-        assign = number_clusters(connected_components(nodes, edges))
-        out = assign.join(deduped.select("id", "text"), "id").select(
-            "text", "cluster_id"
-        )
-        _CLUSTER_MEMO[key] = out.localCheckpoint()
+        _CLUSTER_MEMO[key] = label_clusters(deduped, edges).localCheckpoint()
     return _CLUSTER_MEMO[key]
 
 

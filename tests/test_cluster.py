@@ -9,6 +9,7 @@ against a numpy/BFS oracle is stable.
 import collections
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from vector_search_test_spark.io import load_table
@@ -158,6 +159,185 @@ def test_similarity_clusters_matches_bfs_oracle(spark, sf_dir):
     got = {r.text: r.cluster_id for r in out.collect()}
     assert got == want_by_text
     assert any(v >= 0 for v in got.values()) and any(v == -1 for v in got.values())
+
+
+def _families():
+    """Two families of 4-d points 50 apart on every axis, so a 2-cell
+    IVF at nprobe=1 probes each point's own family and finds the exact
+    graph: in each, a triangle (squared sides 0.09, 0.16, 0.25), a pair
+    (0.25) and a singleton under THETA_EDGE = 1.0 — 8 edges in all."""
+    base = [
+        [0.0, 0.0, 0.0, 0.0],
+        [0.3, 0.0, 0.0, 0.0],
+        [0.3, 0.4, 0.0, 0.0],
+        [0.0, 5.0, 0.0, 0.0],
+        [0.0, 5.5, 0.0, 0.0],
+        [5.0, 0.0, 0.0, 0.0],
+    ]
+    vecs = [v for off in (0.0, 50.0) for v in ([x + off for x in b] for b in base)]
+    return [(10 + i, f"text-{i}", v) for i, v in enumerate(vecs)]
+
+
+THETA_EDGE = 1.0
+_SCHEMA = "id long, text string, embedding array<float>"
+
+
+@pytest.mark.parametrize("nprobe", [None, 1], ids=["full", "partial"])
+def test_similarity_clusters_edge_matrix(spark, nprobe):
+    """An embedding no distance is defined for — NULL, empty, short,
+    long, a NaN element — gets no edge at either probe setting: its
+    text is cluster -1 and every other text keeps the clean corpus's
+    cluster (the BFS oracle), numbering included. Bad rows take the
+    smallest ids, so a leak into the graph would shift the numbering."""
+    clean = _families()
+    bad = [
+        (0, "bad-null", None),
+        (1, "bad-empty", []),
+        (2, "bad-short", [0.0, 0.0, 0.0]),
+        (3, "bad-long", [0.0, 0.0, 0.0, 0.0, 0.0]),
+        (4, "bad-nan", [0.0, float("nan"), 0.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(bad + clean, _SCHEMA)
+    got = similarity_clusters(
+        corpus, threshold=THETA_EDGE, k=4, nlist=2, nprobe=nprobe
+    ).collect()
+
+    ids = np.array([r[0] for r in clean])
+    mat = np.array([r[2] for r in clean], dtype=np.float32).astype(np.float64)
+    want = {
+        f"text-{i - 10}": c
+        for i, c in _bfs_clusters(mat, ids, k=4, theta=THETA_EDGE).items()
+    }
+    want.update({t: -1 for _, t, _ in bad})
+    assert {r.text: r.cluster_id for r in got} == want
+    assert len(got) == len(want)
+    assert sorted(set(want.values())) == [-1, 0, 1, 2, 3]
+
+    # no valid vector at all: the exact graph has no edge; an IVF index
+    # has nothing to train on
+    only_bad = spark.createDataFrame([bad[0], bad[4]], _SCHEMA)
+    run = lambda: similarity_clusters(  # noqa: E731
+        only_bad, threshold=THETA_EDGE, k=4, nlist=2, nprobe=nprobe
+    ).collect()
+    if nprobe is None:
+        assert {r.text: r.cluster_id for r in run()} == {"bad-null": -1, "bad-nan": -1}
+    else:
+        with pytest.raises(ValueError, match="empty corpus"):
+            run()
+
+
+def _group_run(spark, group, action):
+    """Run `action` under its own job group; return its result and the
+    group's jobs as SparkJobInfo, read once the listener bus is idle."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return out, [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+
+
+def _completed_stages(spark, jobs, num_tasks):
+    """Stages of `jobs` with `num_tasks` tasks that ran (a stage a job
+    skips because its shuffle output exists completes no task)."""
+    st = spark.sparkContext.statusTracker()
+    stages = {s for j in jobs for s in j.stageIds}
+    return [
+        s
+        for s in stages
+        if (info := st.getStageInfo(s)) is not None
+        and info.numTasks == num_tasks
+        and info.numCompletedTasks == num_tasks
+    ]
+
+
+# a partition count no other stage of these tests has (shuffles run 8
+# partitions or fewer), so a completed stage of this many tasks IS the
+# edge pipeline's map stage
+_EDGE_PARTS = 13
+
+
+def _edge_pipeline(spark, n_edges, n_nodes):
+    """n_edges (src, dst) rows behind a shuffle whose map stage scans
+    _EDGE_PARTS partitions; its output, so the checkpoint, has 5."""
+    return (
+        spark.range(0, n_edges, 1, _EDGE_PARTS)
+        .select(
+            F.col("id").alias("src"),
+            ((F.col("id") * 7 + 3) % n_nodes).alias("dst"),
+        )
+        .repartition(5)
+    )
+
+
+@pytest.mark.parametrize("finish", ["connected_components", "label_clusters"])
+def test_edge_bound_one_pipeline_run(spark, monkeypatch, finish):
+    """An edge list of E rows under _DRIVER_MAX_EDGES = E (driver
+    union-find) and = E - 1 (distributed loop) gives identical labels,
+    and on each side the upstream edge pipeline's map stage runs once:
+    the bounded collect and the loop both read its checkpoint."""
+    from vector_search_test_spark.operators import cluster
+
+    n_edges, n_nodes = 40, 60
+    nodes = spark.range(0, n_nodes).select(
+        "id", F.concat(F.lit("t"), F.col("id").cast("string")).alias("text")
+    )
+
+    def run():
+        edges = _edge_pipeline(spark, n_edges, n_nodes)
+        if finish == "connected_components":
+            out = connected_components(nodes.select("id"), edges)
+            return {r.id: r.component for r in out.collect()}
+        out = cluster.label_clusters(nodes, edges)
+        return {r.text: r.cluster_id for r in out.collect()}
+
+    sides = []
+    for bound in (n_edges, n_edges - 1):
+        monkeypatch.setattr(cluster, "_DRIVER_MAX_EDGES", bound)
+        got, jobs = _group_run(spark, f"edge-bound-{finish}-{bound}", run)
+        assert len(_completed_stages(spark, jobs, _EDGE_PARTS)) == 1, bound
+        sides.append(got)
+    assert sides[0] == sides[1]
+    assert len(sides[0]) == n_nodes
+
+
+def test_similarity_clusters_edge_bound(spark, monkeypatch):
+    """similarity_clusters gives identical cluster ids on both sides of
+    _DRIVER_MAX_EDGES (E edges: driver numbering at E, the distributed
+    loop + number_clusters at E - 1)."""
+    from vector_search_test_spark.operators import cluster
+    from vector_search_test_spark.operators.cluster import similarity_graph
+
+    corpus = spark.createDataFrame(_families(), _SCHEMA)
+    n_edges = similarity_graph(corpus, threshold=THETA_EDGE, k=4)[1].count()
+    assert n_edges == 8
+    sides = []
+    for bound in (n_edges, n_edges - 1):
+        monkeypatch.setattr(cluster, "_DRIVER_MAX_EDGES", bound)
+        out = similarity_clusters(corpus, threshold=THETA_EDGE, k=4)
+        sides.append(sorted((r.text, r.cluster_id) for r in out.collect()))
+    assert sides[0] == sides[1]
+    assert {c for _, c in sides[0]} == {-1, 0, 1, 2, 3}
+
+
+# Spark jobs one exact similarity_clusters call (collect included) runs
+# on the 12-row corpus of _families(): dedupe + checkpoint 2, spread +
+# checkpoint 2, the query collect 1, scoring + edges checkpoint 3, the
+# bounded edge collect 1, the final collect with its broadcast 2.
+_SIMILARITY_CLUSTERS_JOBS = 11
+
+
+def test_similarity_clusters_job_budget(spark):
+    corpus = spark.createDataFrame(_families(), _SCHEMA)
+    _, jobs = _group_run(
+        spark,
+        "similarity-clusters-budget",
+        lambda: similarity_clusters(corpus, threshold=THETA_EDGE, k=4).collect(),
+    )
+    assert len(jobs) <= _SIMILARITY_CLUSTERS_JOBS
 
 
 def test_edges_symmetric_canonical(spark):

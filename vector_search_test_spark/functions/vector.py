@@ -312,6 +312,23 @@ def _vector_rows(vecs, dim: int):
     return ok, X[finite]
 
 
+def _common_width_rows(vecs):
+    """`_vector_rows` over a list of driver-side vectors, against the
+    width most non-NULL vectors share (ties go to the wider): the edge
+    rule for a vector set collected to the driver, where no other
+    width is given. No non-NULL vector: nothing is valid."""
+    from collections import Counter
+
+    import numpy as np
+    import pandas as pd
+
+    widths = Counter(len(v) for v in vecs if v is not None)
+    if not widths:
+        return np.zeros(len(vecs), dtype=bool), np.empty((0, 0))
+    dim = max(widths, key=lambda n: (widths[n], n))
+    return _vector_rows(pd.Series(vecs, dtype=object), dim)
+
+
 def _encode_vectors(df, id_col: str, vec_col: str, dim: int, fields, encode):
     """`df`'s (id_col, vec_col) rows through `encode` in one scan-only
     Arrow kernel (`mapInPandas`): the frame every vector encoder shares.

@@ -9,12 +9,21 @@ app.py:88-89) -> `nx.connected_components` (app.py:96) -> components with
 
 Spark-first mapping:
 
+- self-kNN: full probe (nprobe None or >= nlist, the exact graph) is the
+  exact Arrow self-kNN (`knn_exact_arrow`: each partition scores its
+  rows against every query and keeps a local top-k, one window merges
+  them) with no index build, so `nlist` and `seed` matter only when
+  nprobe < nlist, where an IVF index is trained and probed.
 - edges (G1): filters P4 (`src != dst`) + P5 (`dist < theta`) over the kNN
   result, canonicalized to (least, greatest) + dropDuplicates — one row
-  per undirected edge, which halves the state the CC loop carries.
-- connected components (G2): iterative min-label propagation — each round
-  every node takes min(own label, neighbors' labels); fixpoint after
-  O(graph diameter) rounds. Each round is one shuffle (groupBy id);
+  per undirected edge, which halves the state the CC loop carries. The
+  edge list is checkpointed once and read once: one bounded collect of
+  at most _DRIVER_MAX_EDGES + 1 rows.
+- connected components (G2): under _DRIVER_MAX_EDGES edges, union-find
+  on the driver over that collect. Past it, iterative min-label
+  propagation over the checkpoint — each round every node takes
+  min(own label, neighbors' labels); fixpoint after O(graph diameter)
+  rounds. Each round is one shuffle (groupBy id);
   `localCheckpoint()` truncates the lineage so round N's plan does not
   re-execute rounds 1..N-1 (SURVEY §4 hazards). Convergence is detected
   by the sum of labels (strictly decreasing until fixpoint — one cheap
@@ -23,17 +32,21 @@ Spark-first mapping:
   O(log n) rounds with the same per-round primitives; similarity graphs
   from thresholded kNN have small diameter, so min-propagation is the
   simpler right default.
-- numbering (G3): component sizes via groupBy, multi-member components
-  dense-ranked by their min-id label (deterministic — replaces nx's
-  set-iteration order, SURVEY §2.9 Q6), singletons -> -1. The rank window
-  is global but runs over one row per multi-member component (small by
-  construction); the big table only joins against that broadcast result.
+- numbering (G3): multi-member components dense-ranked by their min-id
+  label (deterministic — replaces nx's set-iteration order, SURVEY §2.9
+  Q6), singletons -> -1. When the union-find labels are on the driver,
+  the rank runs in Python and one broadcast left join carries it to the
+  corpus (`label_clusters`); past the edge bound, component sizes via
+  groupBy and a global rank window over one row per multi-member
+  component (`number_clusters`), joined back broadcast.
 - text-keyed dedup boundary (G5): `dedupe_by_text` collapses duplicate
   texts to their min-id occurrence BEFORE the graph is built, reproducing
   the reference's node-keyed-by-text semantics (SURVEY §2.9 Q1).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -61,8 +74,9 @@ def similarity_edges(
     ).dropDuplicates()
 
 
-def _driver_components(edges: DataFrame) -> dict[int, int]:
-    """Union-find over a collected edge list: component = min node id.
+def _driver_components(pairs) -> dict[int, int]:
+    """Union-find over collected (src, dst) edge pairs: component = min
+    node id.
 
     Unions always attach the larger root under the smaller, so every
     root IS its component's minimum id; path-halving keeps the scan
@@ -77,8 +91,7 @@ def _driver_components(edges: DataFrame) -> dict[int, int]:
             x = parent[x]
         return x
 
-    for row in edges.select("src", "dst").toLocalIterator():
-        s, d = int(row[0]), int(row[1])
+    for s, d in pairs:
         parent.setdefault(s, s)
         parent.setdefault(d, d)
         rs, rd = find(s), find(d)
@@ -95,6 +108,30 @@ def _driver_components(edges: DataFrame) -> dict[int, int]:
 # whose threshold graph is sparse still takes the fast path, because
 # singletons never leave the cluster.
 _DRIVER_MAX_EDGES = 4_000_000
+
+
+def _read_edges(edges: DataFrame) -> tuple[DataFrame, dict[int, int] | None]:
+    """Materialize the edge list once and read it once.
+
+    Returns (checkpointed edges, node -> min-id component map), the map
+    being None when the list holds more than _DRIVER_MAX_EDGES rows —
+    then the caller runs the distributed loop over the checkpoint. The
+    checkpoint is what keeps the upstream pipeline (kNN scoring + window,
+    or the MinHash band joins) to one execution on both paths; the
+    bounded collect is the only read on the driver path.
+    """
+    edges = edges.select("src", "dst").localCheckpoint()
+    # coalesce(1): a limit over many partitions collects in rounds of
+    # growing partition counts (one job each); over one it is one job.
+    # Arrow, not Rows: 4M edges are 64 MB of columns, but ~1.3 GB of Rows
+    table = edges.coalesce(1).limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if table.num_rows > _DRIVER_MAX_EDGES:
+        return edges, None
+    return edges, _driver_components(
+        pair
+        for batch in table.to_batches(max_chunksize=1 << 16)
+        for pair in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
+    )
 
 
 def connected_components(
@@ -116,21 +153,25 @@ def connected_components(
     path, O(log diameter) checkpointed rounds. Both produce identical
     labels (min id per component).
     """
-    # materialize once: the sizing count and the chosen path both re-read
-    # the edges, and the upstream pipeline (kNN join + window) is far too
-    # expensive to execute twice
-    edges = edges.select("src", "dst").localCheckpoint()
-    if edges.count() <= _DRIVER_MAX_EDGES:
-        comp = _driver_components(edges)
-        ids = nodes.select(F.col(id_col).cast("long").alias("id"))
-        if not comp:
-            return ids.withColumn("component", F.col("id"))
-        mapping = nodes.sparkSession.createDataFrame(
-            list(comp.items()), "id long, __label long"
-        )
-        return ids.join(F.broadcast(mapping), "id", "left").select(
-            "id", F.coalesce("__label", "id").alias("component")
-        )
+    edges, comp = _read_edges(edges)
+    if comp is None:
+        return _propagate_components(nodes, edges, id_col, max_iter)
+    ids = nodes.select(F.col(id_col).cast("long").alias("id"))
+    if not comp:
+        return ids.withColumn("component", F.col("id"))
+    mapping = nodes.sparkSession.createDataFrame(
+        list(comp.items()), "id long, __label long"
+    )
+    return ids.join(F.broadcast(mapping), "id", "left").select(
+        "id", F.coalesce("__label", "id").alias("component")
+    )
+
+
+def _propagate_components(
+    nodes: DataFrame, edges: DataFrame, id_col: str = "id", max_iter: int = 50
+) -> DataFrame:
+    """The distributed form of connected_components over an already
+    checkpointed (src, dst) edge list."""
     # Materialize the symmetrized edge list ONCE, so every iteration's
     # join reads both orientations without re-running the union.
     sym = edges.select("src", "dst").union(
@@ -202,6 +243,41 @@ def number_clusters(components: DataFrame, id_col: str = "id") -> DataFrame:
     return components.join(F.broadcast(multi), "component", "left").select(
         F.col(id_col),
         F.coalesce("cluster_id", F.lit(-1)).cast("long").alias("cluster_id"),
+    )
+
+
+def label_clusters(
+    deduped: DataFrame,
+    edges: DataFrame,
+    id_col: str = "id",
+    text_col: str = "text",
+) -> DataFrame:
+    """G2 + G3 over a similarity graph: (text, cluster_id), one row per
+    `deduped` row, numbered exactly as number_clusters numbers
+    connected_components' labels.
+
+    Under _DRIVER_MAX_EDGES the union-find labels are already on the
+    driver, and every edge endpoint is a `deduped` row, so the dense
+    rank of the multi-member labels runs in Python and one broadcast
+    left join of the (id, cluster_id) map finishes the job — no size
+    groupBy, no global window. Over the bound: the distributed loop and
+    number_clusters."""
+    ids = deduped.select(F.col(id_col).alias("id"), F.col(text_col))
+    edges, comp = _read_edges(edges)
+    if comp is None:
+        assign = number_clusters(_propagate_components(ids, edges))
+        return assign.join(ids, "id").select(text_col, "cluster_id")
+    sizes = Counter(comp.values())
+    rank = {
+        label: i
+        for i, label in enumerate(sorted(c for c, n in sizes.items() if n > 1))
+    }
+    mapping = deduped.sparkSession.createDataFrame(
+        [(v, rank[c]) for v, c in comp.items() if c in rank],
+        "id long, cluster_id long",
+    )
+    return ids.join(F.broadcast(mapping), "id", "left").select(
+        text_col, F.coalesce("cluster_id", F.lit(-1)).cast("long").alias("cluster_id")
     )
 
 
@@ -301,13 +377,22 @@ def similarity_graph(
 ) -> tuple[DataFrame, DataFrame]:
     """The shared dedupe -> self-kNN -> threshold-edges graph build
     (extracted from similarity_clusters so pagerank composes on the
-    identical edge list). Returns (deduped_corpus, canonical_edges)."""
-    from vector_search_test_spark.operators.ivf import ivf_build, ivf_search_all
+    identical edge list). Returns (deduped_corpus, canonical_edges).
 
-    # Materialize the deduped corpus once: it feeds four consumers (KMeans
-    # train, postings, the query side, and the final text join) and Spark
-    # does not common-subexpression-eliminate repeated subplans — without
-    # this each consumer re-runs the groupBy(text) shuffle.
+    Full probe (nprobe None or >= nlist) is the exact Arrow self-kNN,
+    `knn_exact_arrow`, with no index build: an exhaustive IVF search is
+    the same exact scan, so centroids would be trained for nothing.
+    `nlist` and `seed` matter only when nprobe < nlist, where an IVF
+    index is trained and probed."""
+    from vector_search_test_spark.io import spread
+    from vector_search_test_spark.operators.ivf import ivf_build, ivf_search_all
+    from vector_search_test_spark.operators.knn import knn_exact_arrow
+
+    # Materialize the deduped corpus once: it feeds the query side, the
+    # scanned side (or KMeans train and postings) and the final text
+    # join, and Spark does not common-subexpression-eliminate repeated
+    # subplans — without this each consumer re-runs the groupBy(text)
+    # shuffle.
     deduped = dedupe_by_text(corpus, id_col=id_col, text_col=text_col).localCheckpoint()
     # AQE coalesces the dedup shuffle of a small corpus to ONE partition,
     # which then serializes the O(n^2)-ish self-kNN scoring downstream
@@ -315,19 +400,18 @@ def similarity_graph(
     # parallelism (checked AFTER materializing — only the executed plan
     # shows AQE's real partition count); at scale the shuffle already
     # has >= that many partitions and spread() is a no-op.
-    from vector_search_test_spark.io import spread
-
     respread = spread(deduped)
     if respread is not deduped:
         deduped = respread.localCheckpoint()
-    idx = ivf_build(deduped, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
-    idx.postings = idx.postings.localCheckpoint()
     queries = deduped.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
-    knn = ivf_search_all(
-        idx, queries, k=k, nprobe=nprobe if nprobe is not None else nlist
-    )
+    if nprobe is None or nprobe >= nlist:
+        knn = knn_exact_arrow(queries, deduped, k=k, id_col=id_col, vec_col=vec_col)
+    else:
+        idx = ivf_build(deduped, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
+        idx.postings = idx.postings.localCheckpoint()
+        knn = ivf_search_all(idx, queries, k=k, nprobe=nprobe)
     return deduped, similarity_edges(knn, threshold)
 
 
@@ -345,8 +429,12 @@ def similarity_clusters(
     """End-to-end `find_similarity_clusters` (reference app.py:77-114).
 
     corpus: (id, text, embedding). nprobe=None probes all cells (exact
-    graph — the deterministic oracle configuration, SURVEY §2.9 Q3);
-    the reference's own defaults are k=10, nprobe=2 (approximate).
+    graph — the deterministic oracle configuration, SURVEY §2.9 Q3),
+    which runs the exact Arrow self-kNN with no index build, so `nlist`
+    and `seed` matter only when nprobe < nlist; the reference's own
+    defaults are k=10, nprobe=2 (approximate). A text whose embedding
+    is invalid (NULL, the wrong width, a NULL or NaN element) gets no
+    edge, so it is cluster -1.
     Returns (text, cluster_id): one row per distinct text.
     """
     deduped, edges = similarity_graph(
@@ -360,12 +448,7 @@ def similarity_clusters(
         vec_col=vec_col,
         seed=seed,
     )
-    nodes = deduped.select(F.col(id_col).alias("id"))
-    comp = connected_components(nodes, edges)
-    assign = number_clusters(comp)
-    return assign.join(
-        deduped.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(text_col, "cluster_id")
+    return label_clusters(deduped, edges, id_col=id_col, text_col=text_col)
 
 
 def pagerank(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
+    _common_width_rows,
     _sq_dists,
     _vector_rows,
     const_float_array,
@@ -344,19 +345,17 @@ def train_centroids(
             expected <= _MAX_DRIVER_TRAIN_ROWS
             and expected * k <= _MAX_DRIVER_TRAIN_CELLS
         ):
-            import numpy as np
-
-            X = np.array(
-                [r.arr for r in train.collect()], dtype=np.float64
-            )
-            if X.shape[0] == 0:
+            vecs = [r.arr for r in train.collect()]
+            if not vecs:
                 # hash sampling can zero out a degenerate corpus where
                 # every row shares one unlucky vector — fall back to a
                 # plain prefix
-                X = np.array(
-                    [r.arr for r in cached.limit(cap).collect()],
-                    dtype=np.float64,
-                )
+                vecs = [r.arr for r in cached.limit(cap).collect()]
+            # the search-side edge rule: a vector no distance is defined
+            # for (NULL, off-width, NULL/NaN element) trains nothing
+            X = _common_width_rows(vecs)[1]
+            if X.shape[0] == 0:
+                raise ValueError("cannot train an IVF index on an empty corpus")
             return _lloyd_numpy(X, min(k, X.shape[0]), seed, max_iter)
         return _train_mllib(train, k, seed, max_iter, first_center)
     finally:

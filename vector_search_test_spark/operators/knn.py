@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
+    _common_width_rows,
     _sq_dists,
     _vector_rows,
     const_float_array,
@@ -393,19 +394,17 @@ def knn_exact_arrow(
     share): an invalid corpus vector is never a result, and an invalid
     query returns no rows.
     """
-    from collections import Counter
-
     import numpy as np
     import pandas as pd
 
     rows = queries.select(
         F.col(query_id_col), F.col(query_vec_col)
     ).collect()
-    widths = Counter(len(r[1]) for r in rows if r[1] is not None)
-    if not widths:
-        return knn_exact(queries.limit(0), corpus, k=k)
-    dim = max(widths, key=lambda n: (widths[n], n))
-    ok, qmat = _vector_rows(pd.Series([r[1] for r in rows], dtype=object), dim)
+    schema = "query_id long, vec_id long, dist double"
+    ok, qmat = _common_width_rows([r[1] for r in rows])
+    if not ok.any():
+        return queries.sparkSession.createDataFrame([], schema)
+    dim = qmat.shape[1]
     qids = np.array([r[0] for r in rows], dtype=np.int64)[ok]
     kk = k
 
@@ -431,9 +430,7 @@ def knn_exact_arrow(
                 }
             )
 
-    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        score, "query_id long, vec_id long, dist double"
-    )
+    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(score, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("vec_id").asc()
     )
