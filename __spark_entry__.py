@@ -323,11 +323,14 @@ def _pp_index(spark: SparkSession, sf_dir: str):
     from vector_search_test_spark.io import spread
     from vector_search_test_spark.operators.ivf import IvfIndex, assign_cells
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    # only the assignment kernel reads the spread rows: collecting the
+    # queries from the table as stored needs no shuffle, and knn_exact's
+    # scan of the stored table skips a shuffle read
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = _partial_probe_centroids(sf_dir)
-    postings = assign_cells(emb.select("vec_id", "embedding"), cents).select(
-        "list_id", "vec_id", "embedding"
-    )
+    postings = assign_cells(
+        spread(emb).select("vec_id", "embedding"), cents
+    ).select("list_id", "vec_id", "embedding")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -603,11 +606,11 @@ def _q_pca_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_search_test_spark.operators.pca import pca_project
 
     mean, W = _pca_artifacts(sf_dir)
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    proj = pca_project(emb, mean, W)
-    q = proj.filter(F.col("vec_id") < 10).select(
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    proj = pca_project(spread(emb), mean, W)
+    # the queries are projected apart from the spread corpus, so
+    # collecting them needs no shuffle; the projection is per row
+    q = pca_project(emb.filter(F.col("vec_id") < 10), mean, W).select(
         F.col("vec_id").alias("query_id"), F.col("proj").alias("query_vec")
     )
     out = knn_exact(q, proj, k=_PCA_K, vec_col="proj")
@@ -1028,17 +1031,16 @@ def _q_ivf_bignlist_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_knn_widedim_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-dim exact-kNN scale path, measured (bench-only; VERDICT r5
-    #3 carried from r4 #5): at dim 384 the pure-JVM distance forms
-    degrade to the interpreted HOF fold, so knn_exact_arrow
-    (operators/knn.py) scores Arrow batches with vectorized numpy and
-    ships only partition-local top-k to the final merge. The fixture's
+    #3 carried from r4 #5): at dim 384 knn_exact (operators/knn.py)
+    scores Arrow batches with vectorized numpy and ships only
+    partition-local top-k to the final merge. The fixture's
     dim-64 embeddings are widened to 384 by tiling 6 copies, each scaled
     by a distinct constant (JVM-native transform — no Python in the
     widening), so all 384 dimensions carry signal; the corpus is fanned
     out 4x with shifted ids for volume. No per-row Python anywhere: the
     only Python is the Arrow-batched numpy kernel."""
     from vector_search_test_spark.io import spread
-    from vector_search_test_spark.operators.knn import knn_exact_arrow
+    from vector_search_test_spark.operators.knn import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     widened = emb.select(
@@ -1064,7 +1066,7 @@ def _q_knn_widedim_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = widened.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = knn_exact_arrow(q, corpus, k=10)
+    out = knn_exact(q, corpus, k=10)
     out = out.select("query_id", "vec_id", F.round("dist", 6).alias("dist"))
     return _self_check_topk(out, n_queries=20, k=10)
 
@@ -4094,19 +4096,18 @@ def _q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the numpy cross-check + λ=1-reduction + partition-invariance +
     diversity-property tests in tests/test_knn.py. The greedy loop only
     ever touches ≤ fetch_n candidate rows per query inside one
-    applyInPandas group; the corpus side is the standard broadcast-
-    query WindowGroupLimit kNN."""
+    applyInPandas group; the corpus side is knn_exact's partition-local
+    top-k scan."""
     from vector_search_test_spark.io import spread
     from vector_search_test_spark.operators.knn import mmr_rerank
 
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # knn_exact collects the queries: from the stored table, no shuffle
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return mmr_rerank(q, emb, k=5, fetch_n=25, lam=0.7)
+    return mmr_rerank(q, spread(emb), k=5, fetch_n=25, lam=0.7)
 
 
 _TEMP_ALPHA = 0.3

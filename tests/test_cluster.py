@@ -180,6 +180,13 @@ def _families():
 
 THETA_EDGE = 1.0
 _SCHEMA = "id long, text string, embedding array<float>"
+_BAD_ROWS = [
+    (0, "bad-null", None),
+    (1, "bad-empty", []),
+    (2, "bad-short", [0.0, 0.0, 0.0]),
+    (3, "bad-long", [0.0, 0.0, 0.0, 0.0, 0.0]),
+    (4, "bad-nan", [0.0, float("nan"), 0.0, 0.0]),
+]
 
 
 @pytest.mark.parametrize("nprobe", [None, 1], ids=["full", "partial"])
@@ -190,14 +197,7 @@ def test_similarity_clusters_edge_matrix(spark, nprobe):
     cluster (the BFS oracle), numbering included. Bad rows take the
     smallest ids, so a leak into the graph would shift the numbering."""
     clean = _families()
-    bad = [
-        (0, "bad-null", None),
-        (1, "bad-empty", []),
-        (2, "bad-short", [0.0, 0.0, 0.0]),
-        (3, "bad-long", [0.0, 0.0, 0.0, 0.0, 0.0]),
-        (4, "bad-nan", [0.0, float("nan"), 0.0, 0.0]),
-    ]
-    corpus = spark.createDataFrame(bad + clean, _SCHEMA)
+    corpus = spark.createDataFrame(_BAD_ROWS + clean, _SCHEMA)
     got = similarity_clusters(
         corpus, threshold=THETA_EDGE, k=4, nlist=2, nprobe=nprobe
     ).collect()
@@ -208,14 +208,14 @@ def test_similarity_clusters_edge_matrix(spark, nprobe):
         f"text-{i - 10}": c
         for i, c in _bfs_clusters(mat, ids, k=4, theta=THETA_EDGE).items()
     }
-    want.update({t: -1 for _, t, _ in bad})
+    want.update({t: -1 for _, t, _ in _BAD_ROWS})
     assert {r.text: r.cluster_id for r in got} == want
     assert len(got) == len(want)
     assert sorted(set(want.values())) == [-1, 0, 1, 2, 3]
 
     # no valid vector at all: the exact graph has no edge; an IVF index
     # has nothing to train on
-    only_bad = spark.createDataFrame([bad[0], bad[4]], _SCHEMA)
+    only_bad = spark.createDataFrame([_BAD_ROWS[0], _BAD_ROWS[4]], _SCHEMA)
     run = lambda: similarity_clusters(  # noqa: E731
         only_bad, threshold=THETA_EDGE, k=4, nlist=2, nprobe=nprobe
     ).collect()
@@ -224,6 +224,20 @@ def test_similarity_clusters_edge_matrix(spark, nprobe):
     else:
         with pytest.raises(ValueError, match="empty corpus"):
             run()
+
+
+def test_similarity_clusters_partial_probe_all_invalid(spark):
+    """Only malformed embeddings at nprobe=1 < nlist=2: training keeps
+    the lone vector of the most common width (ties go to the wider, so
+    the 5-wide one), the index gets one cell, and the search runs at
+    full probe against that width. No pair has a distance, so every
+    text is cluster -1."""
+    corpus = spark.createDataFrame(_BAD_ROWS, _SCHEMA)
+    got = similarity_clusters(
+        corpus, threshold=THETA_EDGE, k=4, nlist=2, nprobe=1
+    ).collect()
+    assert {r.text: r.cluster_id for r in got} == {t: -1 for _, t, _ in _BAD_ROWS}
+    assert len(got) == len(_BAD_ROWS)
 
 
 def _group_run(spark, group, action):

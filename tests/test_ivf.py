@@ -83,6 +83,46 @@ def test_ivf_search_all_exact_at_full_probe(spark, sf_dir):
     assert got == want
 
 
+def test_ivf_search_all_full_probe_edge_rule(spark, sf_dir):
+    """At full probe a NULL, empty, short, long or NaN-holding vector in
+    the postings is never a result, and a malformed query returns no
+    rows: the search returns exactly the clean index's rows."""
+    from vector_search_test_spark.operators.ivf import IvfIndex
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = ivf_build(emb, nlist=4)
+    dim = len(idx.centroids[0])
+    bad = [
+        (0, 10**9, None),
+        (1, 10**9 + 1, []),
+        (2, 10**9 + 2, [0.0] * (dim - 1)),
+        (3, 10**9 + 3, [0.0] * (dim + 1)),
+        (0, 10**9 + 4, [float("nan")] + [0.0] * (dim - 1)),
+    ]
+    dirty = IvfIndex(
+        centroids=idx.centroids,
+        postings=idx.postings.unionByName(
+            spark.createDataFrame(
+                bad, "list_id int, vec_id long, embedding array<float>"
+            )
+        ),
+    )
+    q = _queries(emb, 10).unionByName(
+        spark.createDataFrame(
+            [(-1, None), (-2, [0.0] * (dim - 1))],
+            "query_id long, query_vec array<float>",
+        )
+    )
+    want = sorted(
+        tuple(r) for r in ivf_search_all(idx, q, k=5, nprobe=4).collect()
+    )
+    got = sorted(
+        tuple(r) for r in ivf_search_all(dirty, q, k=5, nprobe=4).collect()
+    )
+    assert got == want
+    assert {r[0] for r in got} == set(range(10))
+
+
 def test_ivf_recall_at_partial_probe(spark, sf_dir):
     """Partial-probe recall@5 must clear floors pinned on the fixture.
 

@@ -85,55 +85,6 @@ def test_salted_topk_equals_plain_window(spark):
         assert got == want
 
 
-def test_knn_exact_arrow_bit_identical(spark, sf_dir):
-    """The Arrow scorer must reproduce knn_exact bit-for-bit (same
-    per-dimension left-to-right float64 summation as the l2_sq fold)."""
-    from vector_search_test_spark.operators.knn import knn_exact_arrow
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = sorted(
-        (r.query_id, r.vec_id, r.dist)
-        for r in knn_exact(queries, emb, k=4, dim=64).collect()
-    )
-    b = sorted(
-        (r.query_id, r.vec_id, r.dist)
-        for r in knn_exact_arrow(queries, emb, k=4).collect()
-    )
-    assert a == b  # exact doubles, not approx
-
-
-def test_knn_exact_arrow_wide_dim(spark):
-    """Past UNROLL_MAX_TERMS the JVM paths degrade to the HOF fold; the
-    Arrow scorer is the intended wide-dim path and must agree with it."""
-    from vector_search_test_spark.operators.knn import knn_exact_arrow
-
-    dim, n = 256, 60
-    corpus = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: (F.pmod(F.hash(F.col("id") * i), F.lit(1000)) / 1000.0).cast(
-                "float"
-            ),
-        ).alias("embedding"),
-    ).localCheckpoint()
-    queries = corpus.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = sorted(
-        (r.query_id, r.vec_id, r.dist)
-        for r in knn_exact(queries, corpus, k=3, dim=dim).collect()  # HOF fallback
-    )
-    b = sorted(
-        (r.query_id, r.vec_id, r.dist)
-        for r in knn_exact_arrow(queries, corpus, k=3).collect()
-    )
-    assert a == b
-
-
 def test_search_text_unbuilt_index_guard():
     """Reference RuntimeError guard (app.py:60-61) on an empty index."""
     import pytest

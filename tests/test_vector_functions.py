@@ -221,20 +221,23 @@ def test_encoders_edge_matrix(spark, name, slices):
 
 
 @pytest.mark.parametrize("slices", [1, 16])
-def test_knn_exact_arrow_edge_matrix(spark, slices):
-    """`knn_exact_arrow` applies the same edge rule on both sides: an
-    invalid corpus vector is never a result and an invalid query (NULL,
-    short, NULL/NaN-holding) returns no rows; well-formed pairs get the
-    sequential-sum distance and the (dist, vec_id) top-k."""
-    import pandas as pd
-    from pandas.testing import assert_frame_equal
+def test_knn_exact_edge_matrix(spark, slices):
+    """`knn_exact` applies one edge rule on both sides, for both metrics:
+    an invalid corpus vector is never a result and an invalid query
+    (NULL, short, NULL/NaN-holding) returns no rows; under cosine a
+    zero vector is invalid too. Well-formed pairs get the sequential-sum
+    distance (or similarity) and the (dist, vec_id) top-k, exactly."""
+    import math
 
-    from vector_search_test_spark.operators.knn import knn_exact_arrow
+    from vector_search_test_spark.operators.knn import knn_exact
 
     corpus = spark.createDataFrame(
-        spark.sparkContext.parallelize(_ENC_ROWS, slices),
+        spark.sparkContext.parallelize(
+            _ENC_ROWS + [(9, [0.0, 0.0, 0.0, 0.0])], slices
+        ),
         "vec_id long, embedding array<float>",
     )
+    vecs = dict(_ENC_ROWS + [(9, [0.0, 0.0, 0.0, 0.0])])
     qrows = [
         (100, [1.0, 0.5, 0.0, 2.0]),
         (101, None),
@@ -245,27 +248,37 @@ def test_knn_exact_arrow_edge_matrix(spark, slices):
     ]
     queries = spark.createDataFrame(qrows, "query_id long, query_vec array<float>")
     k = 2
-    got = (
-        knn_exact_arrow(queries, corpus, k=k)
-        .toPandas()
-        .sort_values(["query_id", "dist", "vec_id"], ignore_index=True)
-    )
 
-    def dist(a, b):
+    def l2(a, b):
         acc = 0.0
         for x, y in zip(a, b):
             acc += (x - y) * (x - y)
         return acc
 
-    want = pd.DataFrame(
-        [
-            {"query_id": q, "vec_id": i, "dist": d}
-            for q, qv in (qrows[0], qrows[4])
-            for d, i in sorted((dist(qv, _ENC_ROWS[i][1]), i) for i in (0, 7, 8))[:k]
-        ]
-    )
-    assert_frame_equal(got, want, check_dtype=False)
-    assert knn_exact_arrow(queries, corpus.limit(0), k=k).collect() == []
-    for invalid in ("101", "101, 102, 103, 105"):
-        only = queries.filter(f"query_id IN ({invalid})")
-        assert knn_exact_arrow(only, corpus, k=k).collect() == []
+    def cos(a, b):
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+            na += x * x
+            nb += y * y
+        return dot / (math.sqrt(na) * math.sqrt(nb))
+
+    for metric, score, sign, valid_q, valid_x, invalid_q in (
+        ("l2_sq", l2, 1.0, (100, 104), (0, 7, 8, 9), "101, 102, 103, 105"),
+        ("cosine", cos, -1.0, (100,), (0, 7, 8), "101, 102, 103, 104, 105"),
+    ):
+        got = sorted(
+            tuple(r) for r in knn_exact(queries, corpus, k=k, metric=metric).collect()
+        )
+        want = sorted(
+            (q, i, sign * d)
+            for q in valid_q
+            for d, i in sorted(
+                (sign * score(dict(qrows)[q], vecs[i]), i) for i in valid_x
+            )[:k]
+        )
+        assert got == want, metric
+        assert knn_exact(queries, corpus.limit(0), k=k, metric=metric).collect() == []
+        for invalid in ("101", invalid_q):
+            only = queries.filter(f"query_id IN ({invalid})")
+            assert knn_exact(only, corpus, k=k, metric=metric).collect() == []

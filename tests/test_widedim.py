@@ -1,31 +1,26 @@
-"""Wide-dimension (dim > UNROLL_MAX_TERMS) fallback paths, end-to-end
-with value equality against driver numpy (VERDICT r3 #6).
+"""The exact kNN scan and the wide-literal top-k, end-to-end with value
+equality against driver-side references (VERDICT r3 #6).
 
-The unroll-gate policy (functions/vector.py::UNROLL_MAX_TERMS = 96) is
-measured and documented, but only dim-64 corpora run in anger elsewhere.
-These tests push dim 128 and 384 through every wide-dim code path:
-
-- knn_exact with dim=None / dim > cap -> the HOF fold,
-- topk_global with a wide literal query -> the HOF-over-literal form,
-- knn_exact_arrow -> the mapInPandas scale path,
-
-and require BIT-identical doubles to the reference computation: per-pair,
-per-dimension left-to-right float64 accumulation over float32 inputs —
-the shared precision contract all three implementations document.
+`knn_exact` is one Arrow `mapInPandas` kernel at every width and for
+both metrics; these tests push dim 64, 128 and 384 through it, plus the
+HOF-over-literal form `topk_global` takes for a query wider than
+functions/vector.py::UNROLL_MAX_TERMS (96), and require BIT-identical
+doubles to the reference computation: per-pair, per-dimension
+left-to-right float64 accumulation over float32 inputs — the shared
+precision contract the JVM folds, the numpy kernels and the DuckDB
+oracle all document.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import UNROLL_MAX_TERMS
-from vector_search_test_spark.operators.knn import (
-    knn_exact,
-    knn_exact_arrow,
-    topk_global,
-)
+from vector_search_test_spark.operators.knn import knn_exact, topk_global
 
 N_CORPUS = 200
 N_QUERIES = 5
@@ -64,40 +59,56 @@ def _frames(spark, X: np.ndarray, nq: int):
     return corpus, queries
 
 
-@pytest.mark.parametrize("dim", [128, 384])
-def test_knn_exact_arrow_wide_dim_bit_exact(spark, dim):
-    assert dim > UNROLL_MAX_TERMS
+def _ref_cos_topk(qmat: np.ndarray, X: np.ndarray, k: int):
+    """(query, vec_id, similarity) triples in pure Python: the dot
+    product and both squared norms summed one dimension at a time, left
+    to right, in float64 over float32 inputs, then dot / (|q| * |x|).
+    Ordered by similarity descending, ties on vec_id ascending."""
+
+    def sq_norm(v):
+        acc = 0.0
+        for x in v:
+            acc += float(x) * float(x)
+        return acc
+
+    xnorms = [math.sqrt(sq_norm(x)) for x in X]
+    out = {}
+    for qi, qv in enumerate(qmat):
+        qn = math.sqrt(sq_norm(qv))
+        sims = []
+        for vid, xv in enumerate(X):
+            dot = 0.0
+            for a, b in zip(qv, xv):
+                dot += float(a) * float(b)
+            sims.append((-(dot / (qn * xnorms[vid])), vid))
+        out[qi] = [(vid, -neg) for neg, vid in sorted(sims)[:k]]
+    return out
+
+
+def _by_query(rows, descending: bool = False):
+    sign = -1.0 if descending else 1.0
+    by_q: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: (r.query_id, sign * r.dist, r.vec_id)):
+        by_q.setdefault(r.query_id, []).append((r.vec_id, r.dist))
+    return by_q
+
+
+@pytest.mark.parametrize("dim", [64, 128, 384])
+def test_knn_exact_bit_exact(spark, dim):
+    """Both metrics, below and above the width where a Column distance
+    would stop fitting whole-stage codegen: the same (vec_id, dist)
+    lists as the references, doubles compared with ==."""
     X = _corpus(dim, N_CORPUS, seed=dim)
     corpus, queries = _frames(spark, X, N_QUERIES)
-    expected = _ref_topk(X[:N_QUERIES].copy(), X, K)
 
-    got = knn_exact_arrow(queries, corpus, k=K).collect()
-    by_q: dict[int, list] = {}
-    for r in sorted(got, key=lambda r: (r.query_id, r.dist, r.vec_id)):
-        by_q.setdefault(r.query_id, []).append((r.vec_id, r.dist))
-    assert set(by_q) == set(expected)
-    for qi, exp in expected.items():
-        assert [v for v, _ in by_q[qi]] == [v for v, _ in exp]
-        for (_, got_d), (_, exp_d) in zip(by_q[qi], exp):
-            # bit-exact: same float64, not approximately equal
-            assert got_d == exp_d, (qi, got_d, exp_d)
+    got = _by_query(knn_exact(queries, corpus, k=K).collect())
+    assert got == _ref_topk(X[:N_QUERIES].copy(), X, K)
 
-
-def test_knn_exact_hof_wide_dim_matches_arrow(spark):
-    """The JVM HOF fold (dim=None) and the Arrow path must agree exactly
-    at a width where the unrolled form is gated off."""
-    dim = 128
-    X = _corpus(dim, 120, seed=7)
-    corpus, queries = _frames(spark, X, 3)
-    a = {
-        (r.query_id, r.vec_id): r.dist
-        for r in knn_exact(queries, corpus, k=K, dim=None).collect()
-    }
-    b = {
-        (r.query_id, r.vec_id): r.dist
-        for r in knn_exact_arrow(queries, corpus, k=K).collect()
-    }
-    assert a == b
+    got = _by_query(
+        knn_exact(queries, corpus, k=K, metric="cosine").collect(),
+        descending=True,
+    )
+    assert got == _ref_cos_topk(X[:N_QUERIES], X, K)
 
 
 def test_topk_global_wide_literal_query(spark):
@@ -105,6 +116,7 @@ def test_topk_global_wide_literal_query(spark):
     HOF-over-literal branch (len > UNROLL_MAX_TERMS); values bit-equal
     to the numpy reference."""
     dim = 128
+    assert dim > UNROLL_MAX_TERMS
     X = _corpus(dim, 150, seed=11)
     corpus, _ = _frames(spark, X, 1)
     expected = _ref_topk(X[:1].copy(), X, K)[0]
@@ -112,15 +124,15 @@ def test_topk_global_wide_literal_query(spark):
     assert [(r.vec_id, r.dist) for r in got] == expected
 
 
-def test_knn_exact_arrow_plan_is_arrow_not_per_row(spark):
-    """Plan pin for the scale claim: the wide-dim path runs ONE
+def test_knn_exact_plan_is_arrow_not_per_row(spark):
+    """Plan pin for the scale claim: the exact kNN scan runs ONE
     Arrow-batched MapInPandas (vectorized numpy) and a WindowGroupLimit
     merge — never a row-at-a-time BatchEvalPython UDF."""
     dim = 384
     X = _corpus(dim, 64, seed=3)
     corpus, queries = _frames(spark, X, 4)
     plan = (
-        knn_exact_arrow(queries, corpus, k=K)
+        knn_exact(queries, corpus, k=K)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -13,10 +13,11 @@ float32, every arithmetic step is performed in float64 after casting each
 element, and the fold is a sequential left-to-right sum — the same order
 DuckDB's list_sum uses — so Spark and the oracle produce identical doubles.
 The numpy kernels (IVF assign/probe, PQ/OPQ/IVF-PQ/RQ encode and training,
-the wide-dim kNN scan) keep it through `_sq_dists`: one vectorized add per
-dimension, left to right — never a matmul, whose pairwise summation differs
-in the last ulp. Their Arrow boundary reads vectors through `_vector_rows`
-and, for the (id, vector) -> codes/projection encoders, `_encode_vectors`.
+the exact kNN scan) keep it through `_sq_dists` (and, for cosine, `_dots`
+and `_norms`): one vectorized add per dimension, left to right — never a
+matmul, whose pairwise summation differs in the last ulp. Their Arrow
+boundary reads vectors through `_vector_rows` and, for the (id, vector)
+-> codes/projection encoders, `_encode_vectors`.
 """
 
 from __future__ import annotations
@@ -294,6 +295,29 @@ def _sq_dists(X, C):
         t = X[:, i, None] - C[:, i]
         acc += t * t
     return acc
+
+
+def _dots(X, C):
+    """n x k float64 block of inner products of each row of X with each
+    row of C in the `dot` fold's order, ((0 + x0*c0) + x1*c1) + ...:
+    one vectorized add per dimension, like `_sq_dists`."""
+    import numpy as np
+
+    acc = np.zeros((len(X), len(C)))
+    for i in range(X.shape[1]):
+        acc += X[:, i, None] * C[:, i]
+    return acc
+
+
+def _norms(X):
+    """Per-row Euclidean norms in `l2_norm`'s order: the square root of
+    the in-order float64 sum of squares."""
+    import numpy as np
+
+    acc = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        acc += X[:, i] * X[:, i]
+    return np.sqrt(acc)
 
 
 def _vector_rows(vecs, dim: int):

@@ -10,10 +10,10 @@ app.py:88-89) -> `nx.connected_components` (app.py:96) -> components with
 Spark-first mapping:
 
 - self-kNN: full probe (nprobe None or >= nlist, the exact graph) is the
-  exact Arrow self-kNN (`knn_exact_arrow`: each partition scores its
-  rows against every query and keeps a local top-k, one window merges
-  them) with no index build, so `nlist` and `seed` matter only when
-  nprobe < nlist, where an IVF index is trained and probed.
+  exact self-kNN (`knn_exact`: each partition scores its rows against
+  every query and keeps a local top-k, one window merges them) with no
+  index build, so `nlist` and `seed` matter only when nprobe < nlist,
+  where an IVF index is trained and probed.
 - edges (G1): filters P4 (`src != dst`) + P5 (`dist < theta`) over the kNN
   result, canonicalized to (least, greatest) + dropDuplicates — one row
   per undirected edge, which halves the state the CC loop carries. The
@@ -379,14 +379,14 @@ def similarity_graph(
     (extracted from similarity_clusters so pagerank composes on the
     identical edge list). Returns (deduped_corpus, canonical_edges).
 
-    Full probe (nprobe None or >= nlist) is the exact Arrow self-kNN,
-    `knn_exact_arrow`, with no index build: an exhaustive IVF search is
+    Full probe (nprobe None or >= nlist) is the exact self-kNN,
+    `knn_exact`, with no index build: an exhaustive IVF search is
     the same exact scan, so centroids would be trained for nothing.
     `nlist` and `seed` matter only when nprobe < nlist, where an IVF
     index is trained and probed."""
     from vector_search_test_spark.io import spread
     from vector_search_test_spark.operators.ivf import ivf_build, ivf_search_all
-    from vector_search_test_spark.operators.knn import knn_exact_arrow
+    from vector_search_test_spark.operators.knn import knn_exact
 
     # Materialize the deduped corpus once: it feeds the query side, the
     # scanned side (or KMeans train and postings) and the final text
@@ -407,7 +407,7 @@ def similarity_graph(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
     if nprobe is None or nprobe >= nlist:
-        knn = knn_exact_arrow(queries, deduped, k=k, id_col=id_col, vec_col=vec_col)
+        knn = knn_exact(queries, deduped, k=k, id_col=id_col, vec_col=vec_col)
     else:
         idx = ivf_build(deduped, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
         idx.postings = idx.postings.localCheckpoint()

@@ -837,11 +837,6 @@ def ivf_rebalance_cycle(
     # two per-index aggregates halves the fixed per-action overhead the
     # r11 stage split showed dominating the measure legs. Ground truth
     # is queries*k rows, materialized once for both gauges.
-    # NB: deliberately NOT passing dim here — tried r16 and measured
-    # WORSE (recall_gauge 2.36 -> 3.11 s): at gauge scale (tens of
-    # queries x a few thousand postings) the unrolled chain's codegen
-    # compile cost exceeds the whole interpreted fold; unrolling only
-    # pays on bulk joins (vector.py envelope note).
     exact = knn_exact(queries, corpus, k=k).localCheckpoint()
 
     def _gauge(idx: IvfIndex, tag: str) -> DataFrame:
@@ -1081,13 +1076,15 @@ def ivf_search_all(
     )
     dim = len(index.centroids[0]) if index.centroids else 0
     if nprobe >= index.nlist:
-        # exhaustive probe scans every cell for every query — exactly
-        # knn_exact's broadcast self-join, minus the probe ranking and
-        # the list_id equi-join, which at full probe only add plan (the
-        # join predicate matches every (query, cell) pair). Same rows,
-        # same doubles, two fewer shuffles. This is the oracle config
-        # (SURVEY §2.9 Q3), inherently all-pairs — fine at the small
-        # scales where anyone runs it; partial probe is the scale path.
+        # an exhaustive probe scans every cell for every query, which
+        # is exactly knn_exact's scan: the probe ranking and the list_id
+        # equi-join would only add plan (the join matches every
+        # (query, cell) pair). Same rows, same doubles, and knn_exact's
+        # edge rule against the index width, so a NULL, NaN or
+        # wrong-width vector is never a result. This is the oracle
+        # config (SURVEY §2.9 Q3), inherently all-pairs — fine at the
+        # small scales where anyone runs it; partial probe is the scale
+        # path.
         from vector_search_test_spark.operators.knn import knn_exact
 
         return knn_exact(

@@ -9,12 +9,13 @@ Scale notes (100 TB design):
   the projection — a single map-only scan, then Catalyst's
   TakeOrderedAndProject merges per-partition top-k heaps on the driver.
   No shuffle at all.
-- `knn_exact` (Q queries, N corpus): broadcast the query side (queries are
-  small by construction; if not, use the IVF path), BroadcastNestedLoopJoin
-  so every corpus partition scores all queries map-side, then a per-query
-  window top-k. Spark 3.5+ inserts WindowGroupLimit, which cuts each
-  partition to k rows per query BEFORE the shuffle — the shuffle moves
-  O(Q * k * partitions) rows, not O(Q * N).
+- `knn_exact` (Q queries, N corpus): the query side is collected to the
+  driver (queries are small by construction; if not, use the IVF path)
+  and shipped in the task closure. One Arrow `mapInPandas` scan scores
+  each corpus batch against the whole query matrix with numpy and emits
+  a partition-local top-k per query, so the shuffle moves
+  O(Q * k * partitions) rows, not O(Q * N); one per-query `row_number`
+  window merges them (REPOSE's local-top-k + global-merge shape).
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from pyspark.sql import functions as F
 from vector_search_test_spark.functions.vector import (
     UNROLL_MAX_TERMS,
     _common_width_rows,
+    _dots,
+    _norms,
     _sq_dists,
     _vector_rows,
     const_float_array,
@@ -128,35 +131,86 @@ def knn_exact(
 
     Reference: batched self-kNN `index.search(self.embeddings, k)` at
     app.py:85, made exact (nprobe = nlist). Output: (query_id, vec_id,
-    dist), ≤ k rows per query, deterministic tie-break on vec_id.
+    dist), ≤ k rows per query, deterministic tie-break on vec_id. Under
+    `metric="cosine"` `dist` is the similarity, ordered descending.
 
-    The query side is broadcast, so it must fit in executor memory
-    (spark.sql.autoBroadcastJoinThreshold does not apply to an explicit
-    hint — an oversized query set will OOM). For a large query set use
-    the IVF path (operators/ivf.py), which prunes by cell instead of
-    scoring all pairs.
+    The query side is collected to the driver and shipped in the task
+    closure, so it must fit in driver and executor memory; for a large
+    query set use the IVF path (operators/ivf.py), which prunes by cell
+    instead of scoring all pairs. Each corpus batch is scored against
+    the whole query matrix inside `mapInPandas` and emits only its
+    (dist, vec_id) top-k per query; one window merges the batch winners.
 
-    Pass `dim` (the embedding width) to score with the unrolled codegen
-    expression instead of the interpreted HOF — same doubles, ~8x faster
-    on bulk joins while dim <= UNROLL_MAX_TERMS (vector.py note); wider
-    vectors automatically keep the HOF form (the unrolled method would
-    run un-JITed, slower than the fold, and past ~384 terms the plan
-    build itself overflows the stack).
+    Bit-identical doubles to the l2_sq / cosine_sim folds and the DuckDB
+    oracle: squared L2 comes from `_sq_dists`, the numpy form of the
+    precision contract in functions/vector.py; cosine is the in-order
+    dot product over the product of the two in-order norms.
+
+    Edge rule (`_vector_rows`): an invalid corpus vector is never a
+    result, and an invalid query returns no rows. Under cosine a vector
+    of zero or infinite norm is invalid too (its similarity is
+    undefined). `dim` is the width vectors must have; without it, the
+    width most query vectors share.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
-    )
-    if metric == "l2_sq" and dim is not None and dim <= UNROLL_MAX_TERMS:
-        dist, asc = l2_sq_unrolled("__qv", vec_col, dim), True
+    import numpy as np
+    import pandas as pd
+
+    if metric not in _METRICS:
+        raise ValueError(
+            f"unknown metric {metric!r}; expected one of {sorted(_METRICS)}"
+        )
+    cosine = metric == "cosine"
+    rows = queries.select(F.col(query_id_col), F.col(query_vec_col)).collect()
+    vecs = [r[1] for r in rows]
+    if dim is None:
+        ok, qmat = _common_width_rows(vecs)
     else:
-        dist, asc = _distance(metric, F.col("__qv"), F.col(vec_col))
-    scored = corpus.join(F.broadcast(q)).select(
-        "query_id", F.col(id_col).alias("vec_id"), dist.alias("dist")
-    )
-    order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("vec_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
+        ok, qmat = _vector_rows(pd.Series(vecs, dtype=object), dim)
+    qids = np.array([r[0] for r in rows], dtype=np.int64)[ok]
+    if cosine:
+        qnorm = _norms(qmat)
+        defined = np.isfinite(qnorm) & (qnorm > 0)
+        qmat, qids, qnorm = qmat[defined], qids[defined], qnorm[defined]
+    schema = "query_id long, vec_id long, dist double"
+    if not len(qids):
+        return queries.sparkSession.createDataFrame([], schema)
+    width = qmat.shape[1]
+
+    def score(batches):
+        for pdf in batches:
+            valid, X = _vector_rows(pdf[vec_col], width)
+            vids = pdf[id_col].to_numpy(dtype=np.int64)[valid]
+            if cosine:
+                xnorm = _norms(X)
+                defined = np.isfinite(xnorm) & (xnorm > 0)
+                X, vids, xnorm = X[defined], vids[defined], xnorm[defined]
+                # negated similarity, so one ascending sort serves both
+                key = -(_dots(qmat, X) / (qnorm[:, None] * xnorm))
+            else:
+                key = _sq_dists(qmat, X)
+            if not len(vids):
+                continue
+            take = min(k, len(vids))
+            # exact (key, vec_id) lexicographic top-k per query: the
+            # global merge is correct iff every potential winner survives
+            # its batch, which argpartition-with-arbitrary-ties breaks
+            idx = np.lexsort((np.broadcast_to(vids, key.shape), key), axis=1)[
+                :, :take
+            ]
+            dist = np.take_along_axis(key, idx, axis=1).ravel()
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, take),
+                    "vec_id": vids[idx].ravel(),
+                    "dist": -dist if cosine else dist,
+                }
+            )
+
+    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(score, schema)
+    order = F.col("dist").desc() if cosine else F.col("dist").asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
@@ -171,7 +225,6 @@ def range_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     metric: str = "l2_sq",
-    dim: int | None = None,
 ) -> DataFrame:
     """ALL neighbors within `radius` of every query — faiss's
     `range_search` (the fixed-threshold twin of `knn_exact`'s fixed-k;
@@ -182,18 +235,13 @@ def range_search(
     is output-bound by the data's density at `radius`, not by k.
 
     Scale shape: broadcast the query side, ONE corpus scan with the
-    threshold predicate evaluated inside whole-stage codegen — no
-    window, no shuffle, no top-k state at all (strictly cheaper than
-    knn_exact at the same broadcast contract). `dim` unrolls the
-    distance like knn_exact. For similarity metrics (cosine) hits are
+    threshold predicate evaluated map-side — no window, no shuffle, no
+    top-k state at all. For similarity metrics (cosine) hits are
     `dist >= radius`; for distances, `dist <= radius`."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
     )
-    if metric == "l2_sq" and dim is not None and dim <= UNROLL_MAX_TERMS:
-        dist, asc = l2_sq_unrolled("__qv", vec_col, dim), True
-    else:
-        dist, asc = _distance(metric, F.col("__qv"), F.col(vec_col))
+    dist, asc = _distance(metric, F.col("__qv"), F.col(vec_col))
     scored = corpus.join(F.broadcast(q)).select(
         "query_id", F.col(id_col).alias("vec_id"), dist.alias("dist")
     )
@@ -231,8 +279,8 @@ def mrl_two_stage_topk(
     vs brute force depends on the prefix quality (that is the point);
     determinism does not.
 
-    Scale shape: stage 1 is the knn_exact broadcast-join + window
-    pattern with an unrolled prefix-term chain (WindowGroupLimit cuts
+    Scale shape: stage 1 is a broadcast-join + window top-k with an
+    unrolled prefix-term chain (WindowGroupLimit cuts
     partitions to R rows per query before the only shuffle); stage 2
     joins the R-row-per-query id shortlist back to the float table (a
     broadcast-able join at any corpus size) and scores with the l2_sq
@@ -282,7 +330,6 @@ def contrastive_examples(
     query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Contrastive-training example builder: for every anchor, the
     hardest positive (nearest non-self neighbor) plus `n_neg`
@@ -309,10 +356,7 @@ def contrastive_examples(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
     )
-    if dim is not None and dim <= UNROLL_MAX_TERMS:
-        dist = l2_sq_unrolled("__qv", vec_col, dim)
-    else:
-        dist, _ = _distance("l2_sq", F.col("__qv"), F.col(vec_col))
+    dist = l2_sq(F.col("__qv"), F.col(vec_col))
     scored = (
         corpus.join(F.broadcast(q))
         .select("query_id", F.col(id_col).alias("vec_id"), dist.alias("dist"))
@@ -361,84 +405,6 @@ def contrastive_examples(
         )
     )
     return pos.unionByName(negs)
-
-
-def knn_exact_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """`knn_exact` via Arrow-batched numpy — the wide-dim scale path.
-
-    Above UNROLL_MAX_TERMS (dim ~96) the pure-JVM forms degrade to the
-    interpreted HOF fold (~8-13 us/pair); here each corpus partition is
-    scored against the whole query matrix with vectorized numpy inside
-    `mapInPandas` (~0.1 us/pair at dim 768), emitting only a partition-
-    local top-k per query, so the shuffle carries O(partitions * Q * k)
-    rows — never the Q x N cross product. A final per-query window top-k
-    merges the partition winners (same WindowGroupLimit pruning as
-    knn_exact).
-
-    Bit-identical doubles to knn_exact / the DuckDB oracle: distances
-    come from `_sq_dists`, the numpy form of the precision contract in
-    functions/vector.py.
-
-    The query side is collected to the driver and shipped in the task
-    closure (same smallness contract as knn_exact's query broadcast).
-
-    Edge rule (`_vector_rows`, against the width most query vectors
-    share): an invalid corpus vector is never a result, and an invalid
-    query returns no rows.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = queries.select(
-        F.col(query_id_col), F.col(query_vec_col)
-    ).collect()
-    schema = "query_id long, vec_id long, dist double"
-    ok, qmat = _common_width_rows([r[1] for r in rows])
-    if not ok.any():
-        return queries.sparkSession.createDataFrame([], schema)
-    dim = qmat.shape[1]
-    qids = np.array([r[0] for r in rows], dtype=np.int64)[ok]
-    kk = k
-
-    def score(batches):
-        for pdf in batches:
-            valid, X = _vector_rows(pdf[vec_col], dim)
-            if not len(X):
-                continue
-            vids = pdf[id_col].to_numpy(dtype=np.int64)[valid]
-            acc = _sq_dists(qmat, X)
-            take = min(kk, X.shape[0])
-            # exact (dist, vec_id) lexicographic top-k per query: the
-            # global merge is correct iff every potential winner survives
-            # its batch, which argpartition-with-arbitrary-ties breaks
-            idx = np.lexsort((np.broadcast_to(vids, acc.shape), acc), axis=1)[
-                :, :take
-            ]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, take),
-                    "vec_id": vids[idx].ravel(),
-                    "dist": np.take_along_axis(acc, idx, axis=1).ravel(),
-                }
-            )
-
-    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
 
 
 def filtered_topk(
@@ -493,12 +459,12 @@ def knn_label_propagation(
     deterministically: most votes, then the label whose NEAREST
     supporting seed ranks best (min rank), then smallest label.
 
-    Scale shape (the inverse of knn_exact's broadcast orientation,
+    Scale shape (the inverse of knn_exact's query-side orientation,
     deliberately): the TARGET side is the 100 TB corpus and stays the
     scanned side; the seed set — small by the economics of labeling —
     broadcasts with its labels, every target partition scores all
     seeds map-side in codegen (`dim` unrolls the distance under
-    UNROLL_MAX_TERMS like knn_exact), and WindowGroupLimit cuts each
+    UNROLL_MAX_TERMS), and WindowGroupLimit cuts each
     partition to k rows per target BEFORE the shuffle, so the only
     shuffle moves O(targets * k) narrow vote rows — never embeddings.
     """
@@ -576,9 +542,8 @@ def mmr_rerank(
     algorithms.
 
     Scale shape: the greedy loop NEVER sees the corpus — stage 1 is the
-    existing exact cosine top-`fetch_n` (broadcast queries →
-    WindowGroupLimit partial top-k, shuffle carries O(Q·fetch_n·parts)
-    rows); stage 2 re-attaches candidate embeddings by broadcasting the
+    exact cosine top-`fetch_n` of `knn_exact` (partition-local top-k,
+    shuffle carries O(Q·fetch_n·parts) rows); stage 2 re-attaches candidate embeddings by broadcasting the
     OUTPUT-BOUND candidate list (Q·fetch_n ids) into the corpus scan,
     then runs the O(k·fetch_n) greedy per query inside one
     `applyInPandas` group of ≤ fetch_n rows — bounded memory per group
