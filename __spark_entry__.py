@@ -173,8 +173,8 @@ def _partial_probe_centroids(sf_dir: str) -> list[list[float]]:
     vec_id (a canonical order independent of either engine's scan order),
     through the SAME seeded k-means++/Lloyd's kernel ivf_build's driver
     path uses (operators/ivf.py::_lloyd_numpy), then rounded to float32 —
-    the precision assign_cells/probe_cells see after their float32
-    cast — so both sides evaluate distances against bit-identical
+    the precision cell assignment and probe ranking see after their
+    float32 cast — so both sides evaluate distances against bit-identical
     centroid values."""
     key = sf_dir.rstrip("/")
     if key not in _PP_CENTS_MEMO:
@@ -209,18 +209,7 @@ def _q_ivf_search_partial_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe ranking, and the pruned top-k in SQL over a VALUES centroid
     table. Recall floors versus exact search stay pinned in
     tests/test_ivf.py."""
-    from vector_search_test_spark.io import spread
-    from vector_search_test_spark.operators.ivf import IvfIndex, assign_cells
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    cents = _partial_probe_centroids(sf_dir)
-    postings = assign_cells(
-        emb.select("vec_id", "embedding"), cents
-    ).select("list_id", "vec_id", "embedding")
-    idx = IvfIndex(centroids=cents, postings=postings)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    _, idx, q = _pp_index(spark, sf_dir)
     out = ivf_search_all(idx, q, k=_PP_K, nprobe=_PP_NPROBE)
     return out.select("query_id", "vec_id", F.round("dist", 6).alias("dist"))
 
@@ -242,10 +231,12 @@ def _q_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_search_filtered,
     )
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    # the search collects its queries: take them from the table as
+    # stored, so the collect runs no spread shuffle
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = _partial_probe_centroids(sf_dir)
     postings = assign_cells(
-        emb.select("vec_id", "embedding", "label"), cents
+        spread(emb).select("vec_id", "embedding", "label"), cents
     ).select("list_id", "vec_id", "embedding", "label")
     idx = IvfIndex(centroids=cents, postings=postings)
     q = emb.filter(F.col("vec_id") < 10).select(
@@ -430,9 +421,10 @@ def _q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idea is hereby measured and rejected, not ignored.
     exact = knn_exact(q, emb.select("vec_id", "embedding"), k=_PP_K)
     # r12: the four searches collapse into ONE ranked corpus pass
-    # (operators/ivf.py::ivf_search_curve — probe ranks from a single
-    # probe_cells(with_rank) scan; candidates replicate only into the
-    # nprobe values whose probe set contains their list). Row-for-row
+    # (operators/ivf.py::ivf_search_curve — one scan at the largest
+    # nprobe, each candidate carrying its cell's probe rank; candidates
+    # replicate only into the nprobe values whose probe set contains
+    # their list). Row-for-row
     # identical to the per-value ivf_search_all calls, so the oracle
     # (which replays all four searches declaratively) is unchanged.
     # The recall arithmetic below replicates recall_at_k expression-
@@ -500,10 +492,10 @@ def _q_ivf_search_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-#3): the raw curve TABLE — top-k hits per (nprobe, query) at
     every effective probe depth of the tuning sweep — certified
     directly, not only through ivf_recall_curve's aggregated consumer
-    view. operators/ivf.py::ivf_search_curve ranks cells once (probe
-    rank riding the scan), joins the postings once at max(nprobe), and
-    replicates each candidate only into the nprobe values whose probe
-    set contains its list — one pruned pass instead of len(nprobes)
+    view. operators/ivf.py::ivf_search_curve ranks cells once, scans
+    the postings once at max(nprobe) with each candidate carrying its
+    cell's probe rank, and replicates each candidate only into the
+    nprobe values whose probe set contains its list — one pruned pass instead of len(nprobes)
     passes over the hot lists at 100 TB. The operator's contract clamps
     nprobes to [1, nlist] and dedupes, so the entry emits the raw
     clamped labels and the oracle applies the identical clamp at
@@ -679,17 +671,20 @@ def _q_pca_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mean, W = _pca_artifacts(sf_dir)
     cents = _pca_ivf_centroids(sf_dir)
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    proj = pca_project(emb, mean, W).select(
-        "vec_id", F.col("proj").alias("embedding")
-    )
-    postings = assign_cells(proj, cents).select(
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def project(df):
+        return pca_project(df, mean, W).select(
+            "vec_id", F.col("proj").alias("embedding")
+        )
+
+    postings = assign_cells(project(spread(emb)), cents).select(
         "list_id", "vec_id", "embedding"
     )
     idx = IvfIndex(centroids=cents, postings=postings)
-    q = proj.filter(F.col("vec_id") < 10).select(
+    # the search collects its queries: project them from the table as
+    # stored, so the collect runs no spread shuffle
+    q = project(emb.filter(F.col("vec_id") < 10)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = ivf_search_all(idx, q, k=_PP_K, nprobe=_PP_NPROBE)
@@ -991,8 +986,8 @@ def _self_check_topk(out: DataFrame, n_queries: int, k: int) -> DataFrame:
 def _q_ivf_bignlist_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ANN bench config (bench-only; sits past the driver's
     50-entry correctness cap by design — it has no oracle): nlist=300 at
-    dim 64, a 19,200-float centroid matrix that assign_cells and
-    probe_cells ship as a broadcast to their Arrow kernels — measured
+    dim 64, a 19,200-float centroid matrix that assign_cells ships as a
+    broadcast to its Arrow kernel and the search ranks on the driver — measured
     end-to-end (train -> assign -> batched partial probe) instead of
     only equivalence-tested (VERDICT r3 #5). The corpus is the
     embeddings table fanned out 8x with shifted ids so assignment has
@@ -2448,7 +2443,7 @@ def _similarity_graph_parts(
             k=_CLUSTER_K,
             nlist=4,
         )
-        _GRAPH_MEMO[key] = (deduped, edges.localCheckpoint())
+        _GRAPH_MEMO[key] = (deduped, edges)
     return _GRAPH_MEMO[key]
 
 

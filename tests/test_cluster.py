@@ -305,7 +305,8 @@ def test_edge_bound_one_pipeline_run(spark, monkeypatch, finish):
         if finish == "connected_components":
             out = connected_components(nodes.select("id"), edges)
             return {r.id: r.component for r in out.collect()}
-        out = cluster.label_clusters(nodes, edges)
+        # label_clusters takes the list its caller materialized
+        out = cluster.label_clusters(nodes, edges.localCheckpoint())
         return {r.text: r.cluster_id for r in out.collect()}
 
     sides = []

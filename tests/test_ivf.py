@@ -83,11 +83,13 @@ def test_ivf_search_all_exact_at_full_probe(spark, sf_dir):
     assert got == want
 
 
-def test_ivf_search_all_full_probe_edge_rule(spark, sf_dir):
-    """At full probe a NULL, empty, short, long or NaN-holding vector in
-    the postings is never a result, and a malformed query returns no
-    rows: the search returns exactly the clean index's rows."""
-    from vector_search_test_spark.operators.ivf import IvfIndex
+@pytest.mark.parametrize("nprobe", [4, 2])
+def test_ivf_search_all_edge_rule(spark, sf_dir, nprobe):
+    """At full and at partial probe a NULL, empty, short, long or
+    NaN-holding vector in the postings is never a result, and a
+    malformed query returns no rows: the batched search and the nprobe
+    sweep return exactly the clean index's rows."""
+    from vector_search_test_spark.operators.ivf import IvfIndex, ivf_search_curve
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = ivf_build(emb, nlist=4)
@@ -113,14 +115,36 @@ def test_ivf_search_all_full_probe_edge_rule(spark, sf_dir):
             "query_id long, query_vec array<float>",
         )
     )
-    want = sorted(
-        tuple(r) for r in ivf_search_all(idx, q, k=5, nprobe=4).collect()
+    for search in (
+        lambda index: ivf_search_all(index, q, k=5, nprobe=nprobe),
+        lambda index: ivf_search_curve(index, q, k=5, nprobes=(1, nprobe)),
+    ):
+        want = sorted(tuple(r) for r in search(idx).collect())
+        got = sorted(tuple(r) for r in search(dirty).collect())
+        assert got == want
+        assert {r[-3] for r in got} == set(range(10))
+
+
+def test_single_and_batched_search_probe_the_same_cells(spark):
+    """Both searches rank cells against the float32 centroids: 1.00000001
+    rounds to 1.0, so the query at the origin is equidistant from both
+    cells and probes the lower id, cell 0, at nprobe 1."""
+    from vector_search_test_spark.operators.ivf import IvfIndex
+
+    postings = spark.createDataFrame(
+        [(0, 0, [1.0, 0.0]), (1, 1, [-1.0, 0.0])],
+        "list_id int, vec_id long, embedding array<float>",
     )
-    got = sorted(
-        tuple(r) for r in ivf_search_all(dirty, q, k=5, nprobe=4).collect()
+    idx = IvfIndex(centroids=[[1.00000001, 0.0], [-1.0, 0.0]], postings=postings)
+    q = spark.createDataFrame(
+        [(7, [0.0, 0.0])], "query_id long, query_vec array<float>"
     )
-    assert got == want
-    assert {r[0] for r in got} == set(range(10))
+    single = [tuple(r) for r in ivf_search(idx, [0.0, 0.0], k=1, nprobe=1).collect()]
+    batched = [
+        (r.vec_id, r.dist)
+        for r in ivf_search_all(idx, q, k=1, nprobe=1).collect()
+    ]
+    assert single == batched == [(0, 1.0)]
 
 
 def test_ivf_recall_at_partial_probe(spark, sf_dir):
@@ -316,21 +340,22 @@ def _planted(nlist, dim, n_rows, seed):
 
 @pytest.mark.parametrize("nlist,dim", [(12, 8), (1000, 64)])
 def test_kernels_match_python_ranker(spark, nlist, dim):
-    """assign_cells and probe_cells (with and without rank) reproduce
-    the pure-Python ranker row for row at a small and a large nlist,
-    exact ties included: the first minimum / lowest cell id wins."""
+    """assign_cells and the searches' driver ranker reproduce the
+    pure-Python ranker row for row at a small and a large nlist, exact
+    ties included: the first minimum / lowest cell id wins. The
+    centroids and rows are float32 values, so the float32 ranking and
+    `rank_cells`' float64 one see the same numbers."""
+    import numpy as np
+
     from vector_search_test_spark.operators.ivf import (
+        _rank_probes,
         assign_cells,
-        probe_cells,
         rank_cells,
     )
 
     cents, rows = _planted(nlist, dim, 24, seed=nlist)
     emb = spark.createDataFrame(
         list(enumerate(rows)), "vec_id long, embedding array<float>"
-    )
-    q = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     nprobe = 3
     ranked = {i: rank_cells(v, cents, nprobe) for i, v in enumerate(rows)}
@@ -343,18 +368,8 @@ def test_kernels_match_python_ranker(spark, nlist, dim):
     got = {r.vec_id: r.list_id for r in assign_cells(emb, cents).collect()}
     assert got == {i: argmin(v) for i, v in enumerate(rows)}
     assert got[0] == 1 and got[1] == 2
-    got = sorted(
-        (r.query_id, r.list_id)
-        for r in probe_cells(q, cents, nprobe=nprobe).collect()
-    )
-    assert got == sorted((i, c) for i, cs in ranked.items() for c in cs)
-    got = sorted(
-        (r.query_id, r.probe_rank, r.list_id)
-        for r in probe_cells(q, cents, nprobe=nprobe, with_rank=True).collect()
-    )
-    assert got == sorted(
-        (i, p, c) for i, cs in ranked.items() for p, c in enumerate(cs)
-    )
+    got = _rank_probes(np.array(rows, dtype=np.float64), cents, nprobe)
+    assert got.tolist() == [ranked[i] for i in range(len(rows))]
 
 
 # Edge inputs at the kernel boundary: (id, vector) with the vector
@@ -412,35 +427,20 @@ def test_assign_cells_edge_matrix(spark, slices):
 
 
 @pytest.mark.parametrize("slices", [1, 16])
-def test_probe_cells_edge_matrix(spark, slices):
-    """Malformed query vectors probe no cell, so a batched search returns
-    no rows for them; zero-row and single-row partitions pass through."""
-    import pandas as pd
-    from pandas.testing import assert_frame_equal
+def test_ivf_search_edge_matrix(spark, slices):
+    """The edge rows as queries of the partial-probe searches (2 of 3
+    cells) over the index of the well-formed rows: a malformed query
+    gives no rows, the well-formed ones get exactly their probed cells'
+    top-k, and a zero-row query frame gives an empty result."""
+    import numpy as np
 
     from vector_search_test_spark.operators.ivf import (
         IvfIndex,
         assign_cells,
-        probe_cells,
+        ivf_search_curve,
     )
 
     q = _edge_frame(spark, "query_id", "query_vec", slices)
-    got = (
-        probe_cells(q, _EDGE_CENTS, nprobe=2, with_rank=True)
-        .select("query_id", "probe_rank", "list_id")
-        .toPandas()
-        .sort_values(["query_id", "probe_rank"], ignore_index=True)
-    )
-    want = pd.DataFrame(
-        {
-            "query_id": [0, 0, 7, 7, 8, 8],
-            "probe_rank": [0, 1, 0, 1, 0, 1],
-            "list_id": [1, 0, 0, 1, 2, 1],
-        }
-    )
-    assert_frame_equal(got, want, check_dtype=False)
-    assert probe_cells(q.limit(0), _EDGE_CENTS, nprobe=2).collect() == []
-
     corpus = spark.createDataFrame(
         [(i, v) for i, v in _EDGE_ROWS if i in (0, 7, 8)],
         "vec_id long, embedding array<float>",
@@ -451,8 +451,30 @@ def test_probe_cells_edge_matrix(spark, slices):
             "list_id", "vec_id", "embedding"
         ),
     )
-    hits = ivf_search_all(idx, q, k=3, nprobe=2).collect()
-    assert {r.query_id for r in hits} == {0, 7, 8}
+    vec = {i: np.array(v, dtype=np.float32).astype(float) for i, v in _EDGE_ROWS}
+
+    def rows(hits):  # (query_id, vec_id) -> probed top-k, nearest first
+        return sorted(
+            (p, qi, vi, float(((vec[qi] - vec[vi]) ** 2).sum()))
+            for p, cands in hits.items()
+            for qi, vis in cands.items()
+            for vi in vis
+        )
+
+    # query 0 probes cells 1, 0; query 7 (equidistant) cells 0, 1;
+    # query 8 cells 2, 1 — holding vec 0 (cell 1), 7 (cell 0), 8 (cell 2)
+    at = {1: {0: [0], 7: [7], 8: [8]}, 2: {0: [0, 7], 7: [7, 0], 8: [8, 0]}}
+    got = sorted(
+        (2, r.query_id, r.vec_id, r.dist)
+        for r in ivf_search_all(idx, q, k=3, nprobe=2).collect()
+    )
+    assert got == rows({2: at[2]})
+    got = sorted(
+        tuple(r) for r in ivf_search_curve(idx, q, k=3, nprobes=(1, 2)).collect()
+    )
+    assert got == rows(at)
+    assert ivf_search_all(idx, q.limit(0), k=3, nprobe=2).collect() == []
+    assert ivf_search_curve(idx, q.limit(0), k=3, nprobes=(1, 2)).collect() == []
 
 
 def test_ivf_search_wide_embedding_falls_back_interpreted(spark):

@@ -107,13 +107,14 @@ def test_bucketed_postings_join_without_exchange(spark, sf_dir):
 
 @pytest.mark.parametrize("nlist,dim", [(4, 4), (1000, 64)])
 def test_assign_and_probe_plans_carry_no_centroid_matrix(spark, sf_dir, nlist, dim):
-    """Assignment and probing run ONE Arrow kernel at every nlist: the
-    centroid matrix ships as a SparkContext broadcast, never as a plan
-    literal or a broadcast join, and nothing shuffles. At nlist 1000 x
-    dim 64 a literal matrix would be 64k CAST terms in the plan text."""
+    """Assignment and the batched search run Arrow kernels at every
+    nlist: the centroid matrix ships as a SparkContext broadcast or
+    stays on the driver, never as a plan literal or a join, and
+    assignment shuffles nothing. At nlist 1000 x dim 64 a literal matrix
+    would be 64k CAST terms in the plan text."""
     import random
 
-    from vector_search_test_spark.operators.ivf import assign_cells, probe_cells
+    from vector_search_test_spark.operators.ivf import IvfIndex, assign_cells
 
     rng = random.Random(7)
     cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(nlist)]
@@ -123,18 +124,33 @@ def test_assign_and_probe_plans_carry_no_centroid_matrix(spark, sf_dir, nlist, d
     q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    for df in (
-        assign_cells(emb, cents),
-        probe_cells(q, cents, nprobe=4),
-        probe_cells(q, cents, nprobe=4, with_rank=True),
-    ):
+    postings = assign_cells(emb, cents).select("list_id", "vec_id", "embedding")
+    search = ivf_search_all(IvfIndex(cents, postings), q, k=5, nprobe=4)
+    for df in (postings, search):
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         executed = _plan(df)
         assert "MapInPandas" in optimized
-        # no Join Cross / BroadcastNestedLoopJoin carrying a packed matrix
+        # no Join Cross / BroadcastNestedLoopJoin carrying a packed
+        # matrix, and no postings join
         assert "Join" not in optimized and "Join" not in executed
-        assert "Exchange hashpartitioning" not in executed
         assert len(optimized) < 100_000
+    assert "Exchange hashpartitioning" not in _plan(postings)
+
+
+def test_ivf_search_all_prunes_saved_index_partitions(spark, sf_dir, tmp_path):
+    """The batched search keeps the probed cells as a Catalyst filter, so
+    a saved index reads only the probed list_id directories."""
+    from vector_search_test_spark.operators.ivf import ivf_load, ivf_save
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    ivf_save(ivf_build(emb, nlist=4), str(tmp_path / "idx"))
+    loaded = ivf_load(spark, str(tmp_path / "idx"))
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    plan = _plan(ivf_search_all(loaded, q, k=5, nprobe=1))
+    filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "list_id" in filters
 
 
 def test_top_fraction_never_sorts_the_corpus(spark, sf_dir):

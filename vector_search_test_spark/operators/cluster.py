@@ -13,7 +13,10 @@ Spark-first mapping:
   exact self-kNN (`knn_exact`: each partition scores its rows against
   every query and keeps a local top-k, one window merges them) with no
   index build, so `nlist` and `seed` matter only when nprobe < nlist,
-  where an IVF index is trained and probed.
+  where an IVF index is trained and probed by `ivf_search_all`, the
+  same scan restricted to each query's probed cells. Either way the
+  query side, which is the deduped corpus itself, is collected to the
+  driver.
 - edges (G1): filters P4 (`src != dst`) + P5 (`dist < theta`) over the kNN
   result, canonicalized to (least, greatest) + dropDuplicates — one row
   per undirected edge, which halves the state the CC loop carries. The
@@ -110,24 +113,21 @@ def _driver_components(pairs) -> dict[int, int]:
 _DRIVER_MAX_EDGES = 4_000_000
 
 
-def _read_edges(edges: DataFrame) -> tuple[DataFrame, dict[int, int] | None]:
-    """Materialize the edge list once and read it once.
-
-    Returns (checkpointed edges, node -> min-id component map), the map
-    being None when the list holds more than _DRIVER_MAX_EDGES rows —
-    then the caller runs the distributed loop over the checkpoint. The
-    checkpoint is what keeps the upstream pipeline (kNN scoring + window,
-    or the MinHash band joins) to one execution on both paths; the
-    bounded collect is the only read on the driver path.
+def _read_edges(edges: DataFrame) -> dict[int, int] | None:
+    """Read a materialized edge list once: the node -> min-id component
+    map from one bounded collect, or None when the list holds more than
+    _DRIVER_MAX_EDGES rows — then the caller runs the distributed loop
+    over the same materialized list. Materializing (a checkpoint) is
+    what keeps the upstream pipeline (kNN scoring + window, or the
+    MinHash band joins) to one execution on both paths.
     """
-    edges = edges.select("src", "dst").localCheckpoint()
     # coalesce(1): a limit over many partitions collects in rounds of
     # growing partition counts (one job each); over one it is one job.
     # Arrow, not Rows: 4M edges are 64 MB of columns, but ~1.3 GB of Rows
     table = edges.coalesce(1).limit(_DRIVER_MAX_EDGES + 1).toArrow()
     if table.num_rows > _DRIVER_MAX_EDGES:
-        return edges, None
-    return edges, _driver_components(
+        return None
+    return _driver_components(
         pair
         for batch in table.to_batches(max_chunksize=1 << 16)
         for pair in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
@@ -153,7 +153,8 @@ def connected_components(
     path, O(log diameter) checkpointed rounds. Both produce identical
     labels (min id per component).
     """
-    edges, comp = _read_edges(edges)
+    edges = edges.select("src", "dst").localCheckpoint()
+    comp = _read_edges(edges)
     if comp is None:
         return _propagate_components(nodes, edges, id_col, max_iter)
     ids = nodes.select(F.col(id_col).cast("long").alias("id"))
@@ -261,9 +262,12 @@ def label_clusters(
     rank of the multi-member labels runs in Python and one broadcast
     left join of the (id, cluster_id) map finishes the job — no size
     groupBy, no global window. Over the bound: the distributed loop and
-    number_clusters."""
+    number_clusters.
+
+    `edges` must be materialized (as `similarity_graph` returns it): the
+    distributed loop reads it again after the bounded collect."""
     ids = deduped.select(F.col(id_col).alias("id"), F.col(text_col))
-    edges, comp = _read_edges(edges)
+    comp = _read_edges(edges)
     if comp is None:
         assign = number_clusters(_propagate_components(ids, edges))
         return assign.join(ids, "id").select(text_col, "cluster_id")
@@ -377,13 +381,16 @@ def similarity_graph(
 ) -> tuple[DataFrame, DataFrame]:
     """The shared dedupe -> self-kNN -> threshold-edges graph build
     (extracted from similarity_clusters so pagerank composes on the
-    identical edge list). Returns (deduped_corpus, canonical_edges).
+    identical edge list). Returns (deduped_corpus, canonical_edges),
+    both checkpointed.
 
     Full probe (nprobe None or >= nlist) is the exact self-kNN,
     `knn_exact`, with no index build: an exhaustive IVF search is
     the same exact scan, so centroids would be trained for nothing.
     `nlist` and `seed` matter only when nprobe < nlist, where an IVF
-    index is trained and probed."""
+    index is trained and probed. Both searches collect their query side
+    — here the whole deduped corpus — to the driver, so this graph
+    build is for corpora that fit in driver memory."""
     from vector_search_test_spark.io import spread
     from vector_search_test_spark.operators.ivf import ivf_build, ivf_search_all
     from vector_search_test_spark.operators.knn import knn_exact
@@ -412,7 +419,7 @@ def similarity_graph(
         idx = ivf_build(deduped, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
         idx.postings = idx.postings.localCheckpoint()
         knn = ivf_search_all(idx, queries, k=k, nprobe=nprobe)
-    return deduped, similarity_edges(knn, threshold)
+    return deduped, similarity_edges(knn, threshold).localCheckpoint()
 
 
 def similarity_clusters(

@@ -19,15 +19,14 @@ Spark-first mapping (SURVEY §2.4/§2.5, §4 X1/X2):
   filter `list_id IN (...)` is *static partition pruning* — only
   nprobe/nlist of the files are ever read, the Spark replay of faiss
   scanning only the probed inverted lists.
-- search (Q2): rank cells driver-side over the tiny centroid list (same
-  O(nlist) work faiss does in the quantizer), prune postings, exact
-  squared-L2, `orderBy(dist).limit(k)` -> TakeOrderedAndProject.
-- batched search (Q3): per-query probe sets from the same kernel
-  (stable argsort of the query->centroid distances, first nprobe cells),
-  exploded natively, equi-join against postings on `list_id` (AQE
-  skew-join splits hot cells), then a per-query window top-k
-  (WindowGroupLimit cuts each partition to k rows per query before the
-  shuffle).
+- search (Q2, Q3): the queries are collected to the driver (as faiss's
+  `index.search(xq)` holds them), which ranks cells for all of them at
+  once over the float32 centroid matrix (stable argsort, ties to the
+  lowest cell id). The postings keep `list_id IN (probed cells)` as a
+  Catalyst filter, and one partition-local scan (`knn._scan_topk`, the
+  kernel `knn_exact` runs) scores each posting only against the queries
+  that probe its cell; one window (or TakeOrderedAndProject for a
+  single query) merges the per-cell top-k.
 
 With nprobe = nlist every cell is scanned, so results match the exact
 brute-force path bit-for-bit — that is the correctness gate; recall at
@@ -39,19 +38,16 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_test_spark.functions.vector import (
-    UNROLL_MAX_TERMS,
     _common_width_rows,
     _sq_dists,
     _vector_rows,
-    const_float_array,
     l2_sq,
-    l2_sq_const,
-    l2_sq_unrolled,
 )
+from vector_search_test_spark.operators.knn import _merge_topk, _scan_topk
 
 DEFAULT_SEED = 42
 
@@ -104,12 +100,8 @@ def _centroid_dists(vec: Column, centroids: list[list[float]]) -> Column:
     ~25 terms/centroid at dim 64) the whole method runs interpreted and
     loses to the HOF loop. Measured at 2M rows x (nlist=8, dim=64):
     unrolled 12-14 s, HOF-over-literal 5.0 s, HOF-over-broadcast 4.7 s.
-    Single-pair distances (one query vector, 64 terms) still unroll —
-    see l2_sq_const call sites in knn.py / ivf_search — that method
-    stays under the JIT limit and measured ~6x faster than the fold.
-    Both forms sum identically (left-to-right), so values never differ.
-    The silhouette gauge (evaluate.py) reads it; assignment and probing
-    run the Arrow kernel `_map_cells`, which sums in the same order.
+    The silhouette gauge (evaluate.py) reads it; assignment runs the
+    Arrow kernel in `assign_cells`, which sums in the same order.
     """
     return F.transform(_centroid_literal(centroids), lambda c: l2_sq(c, vec))
 
@@ -409,56 +401,6 @@ def _train_mllib(
 _KERNEL_CELLS = 1 << 22
 
 
-def _map_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    out_col: str,
-    out_type,
-    pick,
-) -> DataFrame:
-    """df + `out_col`: `pick` applied to each row's distances to every
-    centroid, in one Arrow-batched numpy kernel (`mapInPandas`) — the
-    shared core of assign_cells and probe_cells.
-
-    `pick` maps a rows x nlist distance block (`_sq_dists`, the numpy
-    form of the precision contract in functions/vector.py; centroids
-    are rounded to float32 first, as the stored centroid table holds
-    them) to a list of one value per row. The matrix ships as a
-    SparkContext broadcast (fetched once per worker; at nlist ~ 1e5 x
-    dim 64 it is ~50 MB, too big for a task closure), so the plan
-    carries no centroid literal and no join.
-
-    A row whose distance is undefined (`_vector_rows`: NULL vector,
-    length != dim, or a NULL/NaN element) keeps its place with
-    `out_col` NULL."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    C = np.array(centroids, dtype=np.float32).astype(np.float64)
-    nlist, dim = C.shape
-    # column-major: each dimension's column `_sq_dists` reads is contiguous
-    bc = df.sparkSession.sparkContext.broadcast(np.asfortranarray(C))
-    step = max(1, _KERNEL_CELLS // nlist)
-    schema = StructType(df.schema.fields + [StructField(out_col, out_type)])
-
-    def kernel(batches):
-        C = bc.value
-        for pdf in batches:
-            ok, X = _vector_rows(pdf[vec_col], dim)
-            vals = []
-            for s in range(0, max(len(X), 1), step):
-                vals += pick(_sq_dists(X[s : s + step], C))
-            out = [None] * len(pdf)
-            for j, v in zip(np.flatnonzero(ok), vals):
-                out[j] = v
-            col = pd.Series(out, index=pdf.index, dtype=object)
-            yield pdf.assign(**{out_col: col})
-
-    return df.mapInPandas(kernel, schema)
-
-
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
@@ -467,57 +409,45 @@ def assign_cells(
 ) -> DataFrame:
     """I2 — nearest-centroid assignment (reference app.py:55 `index.add`).
 
-    One Arrow-batched numpy argmin per batch (`_map_cells`): zero
-    shuffle, zero joins, a kilobyte plan at any nlist. argmin takes the
-    FIRST minimum, so ties go to the lowest cell id, as in `rank_cells`.
-    A vector with no defined distance (NULL, wrong length, or holding a
-    NULL/NaN) gets `out_col` NULL.
-    """
-    from pyspark.sql.types import IntegerType
+    df + `out_col`: the argmin of each row's distances to every centroid
+    in one Arrow-batched numpy kernel (`mapInPandas`) — zero shuffle,
+    zero joins. Distances are `_sq_dists`, the numpy form of the
+    precision contract in functions/vector.py, against the centroids
+    rounded to float32, as the stored centroid table holds them. argmin
+    takes the FIRST minimum, so ties go to the lowest cell id, as in the
+    searches' probe ranking. The matrix ships as a SparkContext
+    broadcast (fetched once per worker; at nlist ~ 1e5 x dim 64 it is
+    ~50 MB, too big for a task closure), so the plan stays kilobytes at
+    any nlist.
 
-    return _map_cells(
-        df, centroids, vec_col, out_col, IntegerType(),
-        lambda d: d.argmin(axis=1).tolist(),
-    )
+    A row whose distance is undefined (`_vector_rows`: NULL vector,
+    length != dim, or a NULL/NaN element) keeps its place with
+    `out_col` NULL."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
+    C = np.array(centroids, dtype=np.float32).astype(np.float64)
+    nlist, dim = C.shape
+    # column-major: each dimension's column `_sq_dists` reads is contiguous
+    bc = df.sparkSession.sparkContext.broadcast(np.asfortranarray(C))
+    step = max(1, _KERNEL_CELLS // nlist)
+    schema = StructType(df.schema.fields + [StructField(out_col, IntegerType())])
 
-def probe_cells(
-    queries: DataFrame,
-    centroids: list[list[float]],
-    nprobe: int,
-    query_vec_col: str = "query_vec",
-    with_rank: bool = False,
-) -> DataFrame:
-    """Per-query probe set: the nprobe cells nearest each query vector.
+    def kernel(batches):
+        C = bc.value
+        for pdf in batches:
+            ok, X = _vector_rows(pdf[vec_col], dim)
+            vals = []
+            for s in range(0, max(len(X), 1), step):
+                vals += _sq_dists(X[s : s + step], C).argmin(axis=1).tolist()
+            out = [None] * len(pdf)
+            for j, v in zip(np.flatnonzero(ok), vals):
+                out[j] = v
+            col = pd.Series(out, index=pdf.index, dtype=object)
+            yield pdf.assign(**{out_col: col})
 
-    The kernel (`_map_cells`) emits ONE row per query carrying its
-    ranked probe cells — a stable argsort of the distances, so ties go
-    to the lowest cell id exactly as in `rank_cells` — and a native
-    explode yields one (query row, list_id) per probed cell. Mirrors
-    faiss's quantizer ranking at app.py:69-70. A query vector with no
-    defined distance (NULL, wrong length, or holding a NULL/NaN) probes
-    no cell, so searches return no rows for it.
-
-    `with_rank=True` explodes with its position instead (posexplode),
-    adding `probe_rank` (0-based position in the per-query ranking) — a
-    cell is in the nprobe=p probe set iff probe_rank < p, which is what
-    lets `ivf_search_curve` evaluate every nprobe value from ONE ranked
-    scan.
-    """
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    nprobe = max(1, min(nprobe, len(centroids)))
-    ranked = _map_cells(
-        queries, centroids, query_vec_col, "__probes",
-        ArrayType(IntegerType(), False),
-        lambda d: list(d.argsort(axis=1, kind="stable")[:, :nprobe]),
-    )
-    probes = (
-        F.posexplode("__probes").alias("probe_rank", "list_id")
-        if with_rank
-        else F.explode("__probes").alias("list_id")
-    )
-    return ranked.select(*queries.columns, probes)
+    return df.mapInPandas(kernel, schema)
 
 
 @dataclass
@@ -617,11 +547,11 @@ def rank_cells(
     sequential-accumulation L2 (the same left-to-right arithmetic the
     JVM fold, the numpy trainers, and the DuckDB chain SQL all use),
     ties to the lowest cell id — driver-side Python over a KB-sized
-    centroid table. THE canonical probe-ranking kernel: ivf_search,
-    IVF-PQ's LUT builder, and IVF-SQ8 all call this one function, so
-    the ranking/tie-break semantics the oracles replay bit-for-bit
-    live in exactly one place; the batched probe_cells kernel is pinned
-    to it row for row (tests/test_ivf.py)."""
+    centroid table, against the centroids as given. IVF-PQ's LUT builder
+    (whose coarse centroids stay float64) and IVF-SQ8 probe with it; the
+    float IVF searches rank with `_rank_probes` over the float32
+    centroids, which tests/test_ivf.py pins to this function on
+    float32-representable centroids."""
     scored = [
         (
             sum(
@@ -1018,6 +948,40 @@ def ivf_load(spark: SparkSession, path: str) -> IvfIndex:
     return IvfIndex(centroids=cents, postings=postings)
 
 
+def _rank_probes(qmat, centroids: list[list[float]], nprobe: int):
+    """Q x nprobe matrix of each query row's nearest cells, nearest
+    first: a stable argsort of the `_sq_dists` distances to the float32
+    centroids (the precision `assign_cells` and the stored centroid
+    table use), so ties go to the lowest cell id, and nprobe is clamped
+    to [1, nlist]. faiss's quantizer ranking (app.py:69-70), run on the
+    driver for the whole query batch at once."""
+    import numpy as np
+
+    C = np.array(centroids, dtype=np.float32).astype(np.float64)
+    nprobe = max(1, min(int(nprobe), len(C)))
+    return np.argsort(_sq_dists(qmat, C), axis=1, kind="stable")[:, :nprobe]
+
+
+def _probed_scan(index: IvfIndex, rows, nprobe: int, k: int) -> DataFrame:
+    """`_scan_topk` candidates of the probed cells for driver-side
+    (query id, vector) `rows`: the vectors checked against the index
+    width (a NULL, wrong-width or NULL/NaN-holding query probes
+    nothing), their cells ranked on the driver, the postings filtered to
+    `list_id IN (probed cells)` — static partition pruning on a saved
+    index — and each posting scored only against the queries that probe
+    its cell."""
+    import numpy as np
+    import pandas as pd
+
+    vecs = pd.Series([r[1] for r in rows], dtype=object)
+    ok, qmat = _vector_rows(vecs, len(index.centroids[0]))
+    qids = np.array([r[0] for r in rows], dtype=np.int64)[ok]
+    ranked = _rank_probes(qmat, index.centroids, nprobe)
+    probes = {int(c): np.nonzero(ranked == c) for c in np.unique(ranked)}
+    postings = index.postings.filter(F.col("list_id").isin(list(probes)))
+    return _scan_topk(postings, qids, qmat, k, probes=probes)
+
+
 def ivf_search(
     index: IvfIndex,
     query_vec: list[float],
@@ -1026,26 +990,18 @@ def ivf_search(
 ) -> DataFrame:
     """Q2 — single-vector ANN search (reference app.py:65-75).
 
-    Probe ranking is done on the driver over the tiny centroid list (the
-    same O(nlist) scalar work faiss's quantizer does); the resulting
-    `list_id IN (...)` filter is static partition pruning against a saved
-    index. Then exact squared-L2 over the probed lists and a global
+    The batched search's scan with a one-row query matrix: cells ranked
+    on the driver (the same O(nlist) work faiss's quantizer does), the
+    `list_id IN (...)` filter as static partition pruning against a
+    saved index, exact squared L2 over the probed lists, and a global
     top-k (TakeOrderedAndProject — per-partition heaps, no shuffle).
-    Returns (vec_id, dist), ascending, ties broken on vec_id.
+    The query keeps its float64 values. Returns (vec_id, dist),
+    ascending, ties broken on vec_id; no rows for a query of the wrong
+    width or holding a NULL/NaN.
     """
-    nprobe = max(1, min(nprobe, index.nlist))
-    probe_ids = rank_cells(query_vec, index.centroids, nprobe)
-    if len(query_vec) <= UNROLL_MAX_TERMS:
-        dist = l2_sq_const("embedding", list(query_vec))
-    else:
-        # wide vectors: the unrolled method would run un-JITed (and past
-        # ~384 terms the plan build overflows the stack) — evaluate the
-        # HOF form against a literal array instead (identical doubles)
-        qlit = const_float_array(query_vec)
-        dist = l2_sq(qlit, F.col("embedding"))
+    cand = _probed_scan(index, [(0, list(query_vec))], nprobe, k)
     return (
-        index.postings.filter(F.col("list_id").isin(probe_ids))
-        .select("vec_id", dist.alias("dist"))
+        cand.select("vec_id", "dist")
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(k)
     )
@@ -1061,55 +1017,24 @@ def ivf_search_all(
 ) -> DataFrame:
     """Q3 — batched ANN search (reference app.py:85 `index.search(all, k)`).
 
-    Plan: per-query probe sets (native array ops, no shuffle) -> equi-join
-    with postings on list_id (the only shuffle; AQE splits skewed cells)
-    -> exact distance -> per-query window top-k (WindowGroupLimit prunes
-    to k rows per query per partition before the final shuffle).
+    The query side is collected to the driver, as faiss's
+    `index.search(xq)` holds it, so it must fit in driver and executor
+    memory. Plan: the postings filtered to the probed cells -> one
+    partition-local Arrow scan that scores each posting against the
+    queries probing its cell and keeps a (dist, vec_id) top-k per
+    (query, cell) -> one per-query window (WindowGroupLimit prunes to k
+    rows per query per partition before its shuffle). Probing every
+    cell is the same scan, and then the rows equal `knn_exact`'s.
 
-    Scale note: compute is O(sum over probed cells) not O(Q*N) — the
-    IVF pruning is what makes this survive 100 TB, unlike knn_exact.
-    Returns (query_id, vec_id, dist), <= k rows per query.
+    Scale note: compute is O(sum over probed cells), not O(Q*N), and the
+    only shuffle moves the per-cell winners. Edge rule (`_vector_rows`
+    against the index width): an invalid posting is never a result and
+    an invalid query returns no rows. Returns (query_id, vec_id, dist),
+    <= k rows per query.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("query_vec"),
-    )
-    dim = len(index.centroids[0]) if index.centroids else 0
-    if nprobe >= index.nlist:
-        # an exhaustive probe scans every cell for every query, which
-        # is exactly knn_exact's scan: the probe ranking and the list_id
-        # equi-join would only add plan (the join matches every
-        # (query, cell) pair). Same rows, same doubles, and knn_exact's
-        # edge rule against the index width, so a NULL, NaN or
-        # wrong-width vector is never a result. This is the oracle
-        # config (SURVEY §2.9 Q3), inherently all-pairs — fine at the
-        # small scales where anyone runs it; partial probe is the scale
-        # path.
-        from vector_search_test_spark.operators.knn import knn_exact
-
-        return knn_exact(
-            q,
-            index.postings.select("vec_id", "embedding"),
-            k=k,
-            dim=dim or None,
-        )
-    probed = probe_cells(q, index.centroids, nprobe, query_vec_col="query_vec")
-    dist = (
-        l2_sq_unrolled("query_vec", "embedding", dim)
-        if 0 < dim <= UNROLL_MAX_TERMS
-        else l2_sq(F.col("query_vec"), F.col("embedding"))
-    )
-    scored = probed.join(index.postings, "list_id").select(
-        "query_id", "vec_id", dist.alias("dist")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    rows = queries.select(F.col(query_id_col), F.col(query_vec_col)).collect()
+    cand = _probed_scan(index, rows, nprobe, k)
+    return _merge_topk(cand.drop("probe_rank"), ["query_id"], k)
 
 
 def ivf_search_filtered(
@@ -1125,8 +1050,8 @@ def ivf_search_filtered(
     knn.filtered_topk and the composition every retrieval API exposes
     at scale ("nearest vectors WHERE lang = 'en'"). The predicate is a
     plain Catalyst filter over the POSTINGS (which may carry any
-    metadata columns alongside list_id/vec_id/embedding), evaluated
-    BEFORE the top-k: it pushes into the postings scan (PushedFilters /
+    metadata columns alongside list_id/vec_id/embedding), applied to
+    the postings BEFORE the scan: it pushes into the postings scan (PushedFilters /
     partition pruning when the metadata is a partition column), so
     selective predicates cut IO and scoring together, and the window
     keeps k survivors — post-filtering an unfiltered top-k would
@@ -1161,53 +1086,26 @@ def ivf_search_curve(
     — the nprobe-tuning sweep as a single plan.
 
     Running `ivf_search_all` once per nprobe scans the probed postings
-    once per value (the largest value's scan repeated, plus all the
-    smaller ones) and compiles one plan per search. This operator ranks
-    cells once WITH their probe rank (probe_cells with_rank), joins the
-    postings once at max(nprobes), replicates each candidate row only
-    into the nprobe values whose probe set contains its list
-    (probe_rank < p — an explode over the filtered literal array), and
-    takes one windowed top-k per (nprobe, query). Row-for-row identical
-    to the per-value searches: the probe set at p IS the first p
-    entries of the same ranking, distances are the same expression, and
-    the (dist, vec_id) tie-break matches. At 100 TB the difference is
-    one pruned pass instead of len(nprobes) passes over the hot lists.
+    once per value and compiles one plan per search. This operator runs
+    `ivf_search_all`'s scan once at max(nprobes); each candidate carries
+    its cell's probe rank for its query, is replicated only into the
+    nprobe values whose probe set contains that cell (probe_rank < p —
+    an explode over the filtered literal array), and one windowed top-k
+    per (nprobe, query) finishes. Row-for-row identical to the
+    per-value searches: the probe set at p IS the first p entries of the
+    same ranking, the scan keeps every cell's own top-k, and the
+    (dist, vec_id) tie-break matches.
 
     Returns (nprobe int, query_id, vec_id, dist), <= k rows per
-    (nprobe, query). Values are clamped to [1, nlist] like probe_cells;
-    duplicate post-clamp values are the caller's to dedupe."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("query_vec"),
-    )
-    dim = len(index.centroids[0]) if index.centroids else 0
+    (nprobe, query). Values are clamped to [1, nlist] like the single
+    searches; duplicate post-clamp values are the caller's to dedupe."""
     pvals = sorted({max(1, min(int(p), index.nlist)) for p in nprobes})
-    pr = probe_cells(
-        q,
-        index.centroids,
-        max(pvals),
-        query_vec_col="query_vec",
-        with_rank=True,
-    )
-    dist = (
-        l2_sq_unrolled("query_vec", "embedding", dim)
-        if 0 < dim <= UNROLL_MAX_TERMS
-        else l2_sq(F.col("query_vec"), F.col("embedding"))
-    )
+    rows = queries.select(F.col(query_id_col), F.col(query_vec_col)).collect()
+    cand = _probed_scan(index, rows, max(pvals), k)
     parr = F.array(*[F.lit(p) for p in pvals])
-    scored = (
-        pr.join(index.postings, "list_id")
-        .select("query_id", "probe_rank", "vec_id", dist.alias("dist"))
-        .withColumn(
-            "nprobe",
-            F.explode(F.filter(parr, lambda p: p > F.col("probe_rank"))),
-        )
+    scored = cand.withColumn(
+        "nprobe", F.explode(F.filter(parr, lambda p: p > F.col("probe_rank")))
     )
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("nprobe", "query_id", "vec_id", "dist")
+    return _merge_topk(scored, ["nprobe", "query_id"], k).select(
+        "nprobe", "query_id", "vec_id", "dist"
     )

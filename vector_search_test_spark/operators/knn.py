@@ -10,12 +10,17 @@ Scale notes (100 TB design):
   TakeOrderedAndProject merges per-partition top-k heaps on the driver.
   No shuffle at all.
 - `knn_exact` (Q queries, N corpus): the query side is collected to the
-  driver (queries are small by construction; if not, use the IVF path)
-  and shipped in the task closure. One Arrow `mapInPandas` scan scores
-  each corpus batch against the whole query matrix with numpy and emits
-  a partition-local top-k per query, so the shuffle moves
+  driver and shipped in the task closure, as faiss's `index.search(xq)`
+  holds it. One Arrow `mapInPandas` scan (`_scan_topk`) scores each
+  corpus batch against the whole query matrix with numpy and emits a
+  partition-local top-k per query, so the shuffle moves
   O(Q * k * partitions) rows, not O(Q * N); one per-query `row_number`
   window merges them (REPOSE's local-top-k + global-merge shape).
+- The IVF searches (operators/ivf.py) run the same scan, with the
+  corpus split into cells: each posting is scored only against the
+  queries that probe its cell, so the work is O(sum over probed cells)
+  instead of O(Q * N). The query side is collected there too, so a
+  query set too large for the driver needs batching by the caller.
 """
 
 from __future__ import annotations
@@ -135,16 +140,10 @@ def knn_exact(
     `metric="cosine"` `dist` is the similarity, ordered descending.
 
     The query side is collected to the driver and shipped in the task
-    closure, so it must fit in driver and executor memory; for a large
-    query set use the IVF path (operators/ivf.py), which prunes by cell
-    instead of scoring all pairs. Each corpus batch is scored against
-    the whole query matrix inside `mapInPandas` and emits only its
-    (dist, vec_id) top-k per query; one window merges the batch winners.
-
-    Bit-identical doubles to the l2_sq / cosine_sim folds and the DuckDB
-    oracle: squared L2 comes from `_sq_dists`, the numpy form of the
-    precision contract in functions/vector.py; cosine is the in-order
-    dot product over the product of the two in-order norms.
+    closure, so it must fit in driver and executor memory. One
+    `_scan_topk` pass emits each corpus batch's (dist, vec_id) top-k per
+    query; one window merges the batch winners. Bit-identical doubles
+    to the l2_sq / cosine_sim folds and the DuckDB oracle.
 
     Edge rule (`_vector_rows`): an invalid corpus vector is never a
     result, and an invalid query returns no rows. Under cosine a vector
@@ -170,11 +169,60 @@ def knn_exact(
     if cosine:
         qnorm = _norms(qmat)
         defined = np.isfinite(qnorm) & (qnorm > 0)
-        qmat, qids, qnorm = qmat[defined], qids[defined], qnorm[defined]
-    schema = "query_id long, vec_id long, dist double"
+        qmat, qids = qmat[defined], qids[defined]
+    cand = _scan_topk(corpus, qids, qmat, k, cosine=cosine, id_col=id_col,
+                      vec_col=vec_col)
+    return _merge_topk(cand.drop("probe_rank"), ["query_id"], k, desc=cosine)
+
+
+def _scan_topk(
+    corpus: DataFrame,
+    qids,
+    qmat,
+    k: int,
+    probes: "dict | None" = None,
+    cosine: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The one scoring scan of every vector search: (query_id,
+    probe_rank, vec_id, dist) rows holding, per Arrow batch, the
+    (dist, vec_id) top-k of each cell's rows for each query probing it;
+    `_merge_topk` merges them. `qids` / `qmat` (driver-side ids and
+    float64 query matrix) ship in the task closure; no query, no rows.
+
+    `probes` maps a cell id to (query rows, probe ranks); the corpus
+    then carries `list_id` and holds only probed cells (the caller's
+    `list_id IN (...)` filter). Without it the corpus is one cell that
+    every query probes at rank 0.
+
+    Squared L2 is `_sq_dists`, the numpy form of the precision contract
+    in functions/vector.py; cosine is the in-order dot product over the
+    product of the in-order norms, and the caller drops queries of zero
+    or infinite norm. A corpus vector `_vector_rows` rejects at the
+    query width (under cosine, also one of zero or infinite norm) is
+    never a result."""
+    import numpy as np
+    import pandas as pd
+
+    schema = "query_id long, probe_rank int, vec_id long, dist double"
     if not len(qids):
-        return queries.sparkSession.createDataFrame([], schema)
+        return corpus.sparkSession.createDataFrame([], schema)
+    qnorm = _norms(qmat) if cosine else None
     width = qmat.shape[1]
+    every = (np.arange(len(qids)), np.zeros(len(qids), dtype=np.int32))
+    cols = [id_col, vec_col] + ([] if probes is None else ["list_id"])
+
+    def cells(pdf, valid):
+        """(corpus rows, (query rows, probe ranks)) per cell of a batch."""
+        if probes is None:
+            yield slice(None), every
+            return
+        lists = pdf["list_id"].to_numpy()[valid]
+        order = np.argsort(lists, kind="stable")
+        ids, starts = np.unique(lists[order], return_index=True)
+        for c, s, e in zip(ids, starts, np.append(starts[1:], len(order))):
+            yield order[s:e], probes[int(c)]
 
     def score(batches):
         for pdf in batches:
@@ -184,31 +232,54 @@ def knn_exact(
                 xnorm = _norms(X)
                 defined = np.isfinite(xnorm) & (xnorm > 0)
                 X, vids, xnorm = X[defined], vids[defined], xnorm[defined]
-                # negated similarity, so one ascending sort serves both
-                key = -(_dots(qmat, X) / (qnorm[:, None] * xnorm))
-            else:
-                key = _sq_dists(qmat, X)
-            if not len(vids):
-                continue
-            take = min(k, len(vids))
-            # exact (key, vec_id) lexicographic top-k per query: the
-            # global merge is correct iff every potential winner survives
-            # its batch, which argpartition-with-arbitrary-ties breaks
-            idx = np.lexsort((np.broadcast_to(vids, key.shape), key), axis=1)[
-                :, :take
-            ]
-            dist = np.take_along_axis(key, idx, axis=1).ravel()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, take),
-                    "vec_id": vids[idx].ravel(),
-                    "dist": -dist if cosine else dist,
-                }
-            )
+                valid[valid] = defined
+            out = []
+            for rows, (qrows, ranks) in cells(pdf, valid):
+                rvids = vids[rows]
+                if not len(rvids):
+                    continue
+                if cosine:
+                    # negated similarity, so one ascending sort serves both
+                    key = -(
+                        _dots(qmat[qrows], X[rows])
+                        / (qnorm[qrows][:, None] * xnorm[rows])
+                    )
+                else:
+                    key = _sq_dists(qmat[qrows], X[rows])
+                take = min(k, len(rvids))
+                # exact (key, vec_id) lexicographic top-k per query: the
+                # global merge is correct iff every potential winner
+                # survives its cell, which argpartition-with-arbitrary-ties
+                # breaks
+                idx = np.lexsort(
+                    (np.broadcast_to(rvids, key.shape), key), axis=1
+                )[:, :take]
+                out.append((
+                    np.repeat(qids[qrows], take),
+                    np.repeat(ranks, take),
+                    rvids[idx].ravel(),
+                    np.take_along_axis(key, idx, axis=1).ravel(),
+                ))
+            if out:
+                qcol, rcol, vcol, dcol = map(np.concatenate, zip(*out))
+                yield pd.DataFrame({
+                    "query_id": qcol,
+                    "probe_rank": rcol.astype(np.int32),
+                    "vec_id": vcol,
+                    "dist": -dcol if cosine else dcol,
+                })
 
-    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(score, schema)
-    order = F.col("dist").desc() if cosine else F.col("dist").asc()
-    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
+    return corpus.select(*cols).mapInPandas(score, schema)
+
+
+def _merge_topk(
+    cand: DataFrame, keys: "list[str]", k: int, desc: bool = False
+) -> DataFrame:
+    """The global merge of `_scan_topk`'s candidates: one `row_number`
+    window per `keys` group, ordered by dist (descending for a
+    similarity) then vec_id, keeping k rows."""
+    order = F.col("dist").desc() if desc else F.col("dist").asc()
+    w = Window.partitionBy(*keys).orderBy(order, F.col("vec_id").asc())
     return (
         cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
